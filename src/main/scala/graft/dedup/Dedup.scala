@@ -126,53 +126,6 @@ object Dedup {
       maxBucketSize: Int = 4096,
       idCol: String = "doc_id", textCol: String = "text",
       materializeCandidates: Boolean = false): DataFrame = {
-    // RESULT MEMO (round 13): the q23/q93/q136/q139/q184 family builds
-    // this exact pair graph from the same corpus five times per suite —
-    // each rebuild re-ran the ~2 s band/verify subchain. Same (input
-    // plan, parameters) → the memoized result, driver-LOCALIZED when the
-    // verified pair list fits [[graft.util.SessionPlanMemo.LocalMemoMaxRows]] (the kmeansMemo
-    // pattern — survives cluster cache resets between queries) and
-    // persist-backed otherwise. This makes the operator EAGER (one probe
-    // job at call time; the result was always consumed anyway). Same
-    // immutability assumption as Spark's table cache;
-    // [[clearPreparedPlans]] is the invalidation hook for inputs
-    // rewritten in place.
-    val memoKey = NearDupPairsKey(thresholdNum, thresholdDen, k, rows,
-      shingleWidth, maxBucketSize, idCol, textCol, materializeCandidates)
-    val inputPlan = docs.queryExecution.analyzed
-    nearDupPairsMemo.lookup(docs.sparkSession, memoKey, inputPlan) match {
-      case Some(hit) => return hit
-      case None =>
-    }
-    val (built, memoFrames) = buildNearDupPairs(docs, thresholdNum,
-      thresholdDen, k, rows, shingleWidth, maxBucketSize, idCol, textCol,
-      materializeCandidates)
-    val (result, trackFrames) =
-      graft.util.SessionPlanMemo.localizeOrPersist(built, memoFrames)
-    nearDupPairsMemo.put(docs.sparkSession, memoKey, inputPlan, result,
-      trackFrames)
-    result
-  }
-
-  /** The full banding/verification PLAN behind [[jaccardNearDupPairs]],
-   * without the result memo — exactly what executes on a memo miss.
-   * Exposed (lazy, one inspectable tree) so plan-shape audits can pin the
-   * scale contract of the pipeline itself and composing operators can
-   * extend it below an action. */
-  def nearDupPairsPlan(docs: DataFrame, thresholdNum: Int, thresholdDen: Int,
-      k: Int = 128, rows: Int = 4, shingleWidth: Int = 5,
-      maxBucketSize: Int = 4096,
-      idCol: String = "doc_id", textCol: String = "text",
-      materializeCandidates: Boolean = false): DataFrame =
-    buildNearDupPairs(docs, thresholdNum, thresholdDen, k, rows, shingleWidth,
-      maxBucketSize, idCol, textCol, materializeCandidates)._1
-
-  /** Shared builder: returns the ordered pair frame plus the frames a memo
-   * must unpersist on eviction (the candidates cache, when materialized). */
-  private def buildNearDupPairs(docs: DataFrame, thresholdNum: Int,
-      thresholdDen: Int, k: Int, rows: Int, shingleWidth: Int,
-      maxBucketSize: Int, idCol: String, textCol: String,
-      materializeCandidates: Boolean): (DataFrame, Seq[DataFrame]) = {
     val banded = lshBanded(docs, k, rows, shingleWidth, idCol, textCol)
 
     // Pairs come from grouping each bucket and expanding in-bucket
@@ -208,10 +161,9 @@ object Dedup {
         candidatePairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else candidatePairs
 
-    (verifyJaccardCandidates(docs, candidates, thresholdNum,
+    verifyJaccardCandidates(docs, candidates, thresholdNum,
       thresholdDen, shingleWidth, idCol, textCol)
-      .orderBy("id_a", "id_b"),
-      if (materializeCandidates) Seq(candidates) else Seq.empty)
+      .orderBy("id_a", "id_b")
   }
 
   /**
@@ -422,8 +374,7 @@ object Dedup {
    * the tuning read before anyone commits a dedup threshold to a
    * release (a corpus where 3/4→9/10 halves the pair count dedups very
    * differently from one where the frontier is flat). The pair graph
-   * is built ONCE at the loosest candidate (riding the session memo
-   * when that point matches the q14 family's) and every tighter
+   * is built ONCE at the loosest candidate and every tighter
    * threshold is a post-hoc integer filter on the verified (inter,
    * uni) evidence — the frontier costs |pairs|·|thresholds| summary
    * work on top of one build, never |thresholds| graph builds.
@@ -638,17 +589,6 @@ object Dedup {
    * reuse cannot apply; it additionally persists the gram sets (hash
    * arrays and id pairs only, never text).
    *
-   * PREPARED-PLAN MEMO + IMMUTABILITY ASSUMPTION: repeat invocations with
-   * the same (input plan, parameters) return a memoized DataFrame whose
-   * persisted intermediates may hold data materialized by an EARLIER run —
-   * the same assumption Spark's own table cache makes. If the files behind
-   * `docs` are rewritten IN PLACE at an unchanged path, call
-   * [[clearPreparedPlans]] (or read under a new path) or stale candidate
-   * pairs can be served. The memo is per-session, LRU-bounded
-   * ([[PreparedPpjoinMax]] parameterizations; evictions unpersist their
-   * intermediates), and soft-referenced (GC-clearable, never pins a
-   * session).
-   *
    * @return (id_a, id_b, inter, uni) — integer columns only. UNORDERED
    *         (like every relational result; callers needing a stable order
    *         sort): the former trailing orderBy was a full extra exchange +
@@ -660,69 +600,13 @@ object Dedup {
       collapseIdentical: Boolean = true): DataFrame = {
     require(0 < thresholdNum && thresholdNum <= thresholdDen,
       s"threshold must be a rational in (0,1], got $thresholdNum/$thresholdDen")
-    // PREPARED-PLAN cache: constructing this operator's tree costs ~0.3 s
-    // of pure driver time (each chained Dataset op re-analyzes a tree
-    // carrying the tokenizer/shingle/md5 lambda expressions), paid on
-    // EVERY invocation — iterative pipelines and repeated runs re-derive
-    // the identical plan. Same (input plan, parameters) → the same
-    // DataFrame, so memoize it per session (the prepared-statement cache
-    // every SQL engine keeps; same input-immutability assumption as
-    // Spark's own table cache). `sameResult` on the analyzed input plan
-    // is the correctness key; persisted intermediates are re-registered
-    // on every hit because callers (and the bench harness) may have
-    // cleared the cache manager between runs.
-    val prepKey = PreparedPpjoinKey(thresholdNum, thresholdDen, n, idCol,
-      textCol, materializeCandidates, collapseIdentical)
-    val inputPlan = docs.queryExecution.analyzed
-    val spark = docs.sparkSession
-    preparedPpjoin.synchronized {
-      val entries = preparedPpjoin.get(spark)
-      if (entries != null) {
-        // Expunge entries whose soft payload was GC-cleared — releasing
-        // their still-registered cached RDDs through the id fallback (the
-        // frames themselves are unreachable) — then LRU: a hit moves to
-        // the end, so a threshold-sweeping session evicts its stalest
-        // parameterization, not its hottest.
-        { var i = 0
-          while (i < entries.size) {
-            if (entries(i).payload.isEmpty) {
-              entries(i).unpersistFrames()
-              entries.remove(i)
-            } else i += 1
-          } }
-        // Single payload SNAPSHOT per entry: `payload` re-reads a
-        // SoftReference, which GC can clear BETWEEN calls — exactly under
-        // memory pressure — so deciding "hit" on one read and then
-        // dereferencing again would turn a cache hit into a crash. The
-        // snapshot strongly pins the payload from here on.
-        var hit: Option[(PreparedPpjoinEntry, Int, DataFrame, Seq[DataFrame])] = None
-        val it = entries.zipWithIndex.iterator
-        while (hit.isEmpty && it.hasNext) {
-          val (e, i) = it.next()
-          if (e.key == prepKey) {
-            e.payload match {
-              case Some((plan, df, frames)) if plan.sameResult(inputPlan) =>
-                hit = Some((e, i, df, frames))
-              case _ =>
-            }
-          }
-        }
-        hit.foreach { case (e, i, df, frames) =>
-          entries.remove(i); entries += e
-          e.repersist(frames)
-          return df
-        }
-      }
-    }
-    // Execution profile note (negative result, measured round 10): running
+    // Execution profile note (negative result, measured): running
     // this whole plan on the AQE-off child session — the BPE learner's
     // low-latency trick — LOST to adaptive execution under the bench
     // protocol (q59 ~2.0-2.2 s vs ~1.7-1.8 s, q76 2.1 vs 1.3, two full
     // A/B rounds): AQE's concurrent stage materialization and partition
     // coalescing outweigh its per-stage driver latency on this topology.
     // The operator therefore stays on the caller's session.
-    val docsQ = docs
-    val toPersist = scala.collection.mutable.Buffer.empty[DataFrame]
     // Both paths share one candidate-materialization policy: persist is
     // lazy (no job at construction) and lineage-preserving (executor loss
     // recomputes, never fails the job). Dedup across the verify join's
@@ -741,7 +625,7 @@ object Dedup {
       // the prefix chain's copy: the cache manager substitutes
       // InMemoryRelation for every canonicalized-equal subtree at
       // planning time, so one cached corpus pass feeds ranking AND both
-      // verify branches. (Negative result, round 10: replacing this
+      // verify branches. (Negative result: replacing this
       // persist with an id-keyed exchange above the gram build — so the
       // scheduler could dedup it as a stage instead of best-effort cache
       // races — benched ~0.45 s WORSE on q59: shuffling the full gram
@@ -755,11 +639,8 @@ object Dedup {
       // twice without this. 16 bytes per surviving candidate, spilling and
       // lineage-recoverable, so the cache is bounded by the same candidate
       // volume the verify join materializes anyway.
-      val gramSets = if (materializeCandidates) {
-        toPersist += st.gramSets
-        st.gramSets.persist(lvl)
-      } else st.gramSets
-      toPersist += st.candidates
+      val gramSets =
+        if (materializeCandidates) st.gramSets.persist(lvl) else st.gramSets
       val candidates = st.candidates.persist(lvl)
       // With gramSets cached, the verify sides re-read the columnar cache
       // instead of re-tokenizing, and under AQE the candIds semi-join
@@ -768,8 +649,8 @@ object Dedup {
       (gramSets, ppjoinVerify(gramSets, candidates, thresholdNum, thresholdDen,
         sharedGramExchange = !materializeCandidates))
     }
-    val result = if (!collapseIdentical) {
-      ppjoin(docsQ)._2
+    if (!collapseIdentical) {
+      ppjoin(docs)._2
     } else {
       // Identity-class pre-collapse: one PPJoin over canonical docs, then
       // an exact expansion back to member ids (see the scaladoc above for
@@ -777,12 +658,12 @@ object Dedup {
       // single window pass over (id, fp) — the only thing that ever
       // shuffles here besides the canonical sliver; text stays in its scan.
       val byFp = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-      val memberMap = docsQ
+      val memberMap = docs
         .select(col(idCol).as("id"), TextAnalysis.fingerprint(col(textCol)).as("fp"))
         .select(col("id"), col("fp"),
           min(col("id")).over(byFp).as("cid"),
           count(lit(1)).over(byFp).as("nc"))
-      val canonDocs = docsQ.select(col(idCol), col(textCol)).join(
+      val canonDocs = docs.select(col(idCol), col(textCol)).join(
         memberMap.filter(col("id") === col("cid")).select(col("id").as(idCol)),
         Seq(idCol), "left_semi")
 
@@ -818,137 +699,7 @@ object Dedup {
 
       cross.union(within)
     }
-    preparedPpjoin.synchronized {
-      var entries = preparedPpjoin.get(spark)
-      if (entries == null) {
-        entries = scala.collection.mutable.Buffer.empty
-        preparedPpjoin.put(spark, entries)
-      }
-      entries += new PreparedPpjoinEntry(prepKey, inputPlan, result, toPersist.toSeq)
-      // LRU cap: evict the stalest parameterization AND release its
-      // persisted intermediates — a session sweeping thresholds must not
-      // accumulate pinned caches (one cache entry per sweep point).
-      while (entries.size > PreparedPpjoinMax)
-        entries.remove(0).unpersistFrames()
-    }
-    result
   }
-
-  /** Drop every prepared PPJoin plan memoized for `spark` and unpersist
-   * their intermediate frames — the invalidation hook for callers whose
-   * input files are REWRITTEN IN PLACE at an unchanged path (the memo, like
-   * Spark's own table cache, assumes immutable inputs: `sameResult` keys on
-   * the plan, not the bytes behind it). */
-  def clearPreparedPlans(spark: org.apache.spark.sql.SparkSession): Unit = {
-    preparedPpjoin.synchronized {
-      val entries = preparedPpjoin.remove(spark)
-      if (entries != null) entries.foreach(_.unpersistFrames())
-    }
-    nearDupPairsMemo.clear(spark)
-    componentsMemo.clear(spark)
-  }
-
-  /** Key + bounded per-session store for [[ngramJaccardPairs]]'s prepared
-   * plans. The payload (analyzed plan, result frame, persisted
-   * intermediates) is held through a SoftReference: a DataFrame strongly
-   * references its SparkSession, so a strong value chain from this map
-   * would pin the WeakHashMap KEY forever and no session's entries could
-   * ever be collected. Softly-held payloads are released under memory
-   * pressure; a CLOSED session then becomes weakly reachable and the
-   * whole map entry is expunged, while a LIVE session just re-prepares on
-   * the next call (cache semantics, not correctness). */
-  private[dedup] final case class PreparedPpjoinKey(num: Int, den: Int, n: Int,
-      idCol: String, textCol: String, mat: Boolean, collapse: Boolean)
-  private[dedup] final class PreparedPpjoinEntry(
-      val key: PreparedPpjoinKey,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      df: DataFrame, frames: Seq[DataFrame]) {
-    private val ref = new java.lang.ref.SoftReference((plan, df, frames))
-    // Unpersist handle that SURVIVES the soft payload: once GC clears the
-    // reference, the frames (the only strong path to their cached plans)
-    // are unreachable and a frame-based unpersist is a silent no-op — the
-    // still-registered MEMORY_AND_DISK blocks would leak with no handle
-    // left but spark.catalog.clearCache(). Cache RDD ids are plain Ints
-    // (no session/plan pinned through the WeakHashMap value chain), and
-    // the context rides a WeakReference for the same reason; ids refresh
-    // opportunistically on every memo hit (the only moment the frames are
-    // both reachable and possibly materialized), so the residual window
-    // is a frame materialized and GC-cleared with no intervening access.
-    private val weakCtx = new java.lang.ref.WeakReference(df.sparkSession.sparkContext)
-    @volatile private var cacheRddIds: Set[Int] = Set.empty
-    def payload: Option[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        DataFrame, Seq[DataFrame])] = Option(ref.get())
-    /** Quiet idempotent re-persist on a memo hit: only re-register frames
-     * the caller actually evicted (persist on a live entry logs a
-     * warning). Takes the caller's payload SNAPSHOT — re-reading the soft
-     * reference here would reopen the TOCTOU this signature closes. */
-    def repersist(frames: Seq[DataFrame]): Unit = {
-      frames.foreach { f =>
-        if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      cacheRddIds ++= frames.flatMap(
-        org.apache.spark.sql.graft.GraftSqlBridge.materializedCacheRddId)
-    }
-    def unpersistFrames(): Unit = payload match {
-      case Some((_, _, fs)) =>
-        fs.foreach { f =>
-          if (f.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-            f.unpersist(blocking = false)
-        }
-        cacheRddIds = Set.empty
-      case None =>
-        // Payload GC-cleared: free the orphaned cache blocks by RDD id.
-        // The cache manager keeps a stale (tiny, driver-only) registry
-        // entry for the unreachable plan; the blocks themselves release.
-        for (ctx <- Option(weakCtx.get()); if !ctx.isStopped; id <- cacheRddIds;
-             rdd <- ctx.getPersistentRDDs.get(id))
-          rdd.unpersist(blocking = false)
-        cacheRddIds = Set.empty
-    }
-    /** Test seam: drop the soft payload as GC would under pressure. */
-    private[dedup] def simulatePayloadClear(): Unit = ref.clear()
-    private[dedup] def knownCacheRddIds: Set[Int] = cacheRddIds
-  }
-  private val PreparedPpjoinMax = 8
-  private val preparedPpjoin = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Buffer[PreparedPpjoinEntry]]
-
-  /** Test seam: the raw memo entries for `spark` (GC-clear simulation). */
-  private[dedup] def preparedPpjoinEntries(
-      spark: org.apache.spark.sql.SparkSession): Seq[PreparedPpjoinEntry] =
-    preparedPpjoin.synchronized {
-      Option(preparedPpjoin.get(spark)).map(_.toSeq).getOrElse(Seq.empty)
-    }
-
-  /** Test hook: (live memo entries, intermediate frames still persisted)
-   * for `spark` — the bound the LRU eviction spec pins. */
-  private[graft] def preparedPpjoinStats(
-      spark: org.apache.spark.sql.SparkSession): (Int, Int) =
-    preparedPpjoin.synchronized {
-      val entries = Option(preparedPpjoin.get(spark))
-        .map(_.toSeq).getOrElse(Seq.empty)
-      val persisted = entries.flatMap(_.payload).flatMap(_._3)
-        .count(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      (entries.size, persisted)
-    }
-
-  // ------------------------------------ result memos (round 13)
-  // Shared machinery lives in [[graft.util.SessionPlanMemo]]; the
-  // near-dup pair graph and the component labels are two of its three
-  // instantiations (session assembly is the third).
-
-  /** Parameter key for the [[jaccardNearDupPairs]] memo. */
-  private[dedup] final case class NearDupPairsKey(num: Int, den: Int, k: Int,
-      rows: Int, sw: Int, maxBucket: Int, idCol: String, textCol: String,
-      mat: Boolean)
-  private[graft] val nearDupPairsMemo =
-    new graft.util.SessionPlanMemo[NearDupPairsKey](8)
-  // Components payloads are localCheckpoint'd (truncated lineage), so a
-  // hit must verify the blocks are still registered — see stillServable.
-  private[graft] val componentsMemo = new graft.util.SessionPlanMemo[Int](8,
-    GraftSqlBridge.logicalRddsServable)
 
   /** Intermediate relations of the PPJoin pipeline — one builder shared by
    * [[ngramJaccardPairs]] and [[ppjoinCandidateStats]] so the diagnostic
@@ -2070,59 +1821,50 @@ object Dedup {
    * the hop-propagation bound). Convergence is detected by the observed
    * label-sum fixpoint riding each round's materialization job; each round
    * checkpoints its label table and unpersists the previous one so the
-   * lineage does not grow unboundedly. If `maxIter` rounds pass without a
+   * lineage does not grow unboundedly. The operator is therefore EAGER
+   * (iteration needs each round's sum) and returns the last round's
+   * checkpointed label table. If `maxIter` rounds pass without a
    * fixpoint the labels are a valid PARTIAL merge (every label is some
    * reachable id, components may remain split) — callers needing a hard
    * guarantee should raise `maxIter`; the log-depth jump makes 30 rounds
    * enough for any graph that fits in any cluster (2^30 diameter).
    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // RESULT MEMO (round 13): this operator is EAGER (every round runs a
-    // checkpoint job), so four suite queries re-running it on the same
-    // memoized pair graph re-paid the whole iterative chain. Same (pairs
-    // plan, maxIter) → the stored label table, driver-LOCALIZED under
-    // [[graft.util.SessionPlanMemo.LocalMemoMaxRows]] (component tables are bounded by the pair
-    // graph, a corpus sliver) and persist-backed over a localCheckpoint
-    // otherwise — the truncated-lineage fallback is guarded by the
-    // stillServable check below so an external unpersist-all degrades to
-    // recompute. Same immutability assumption as the pair memo;
-    // [[clearPreparedPlans]] invalidates.
-    val ccInputPlan = pairs.queryExecution.analyzed
-    componentsMemo.lookup(pairs.sparkSession, maxIter, ccInputPlan) match {
-      case Some(hit) => return hit
-      case None =>
-    }
     // Convergence check: labels only ever decrease (least of old label and
     // neighbor min), so the total label sum strictly decreases iff any node
     // changed. The sum rides the SAME job that materializes each round's
     // label table: an `observe` aggregate collected during the eager
     // localCheckpoint — one job per iteration total, no separate
     // convergence scan. decimal(38,0) so the sum cannot overflow however
-    // large the ids are; an empty graph observes null → zero.
-    def observedSum(df: DataFrame): (DataFrame, () => java.math.BigDecimal) = {
+    // large the ids are; an empty graph observes null → zero. The same
+    // observation counts the rows, and the checkpoint carries that count
+    // as its size estimate, so a small label table broadcasts into the
+    // next round's joins and into the caller's plan.
+    def observedSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
       val obs = org.apache.spark.sql.Observation()
       val ckpt = df
-        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("label_sum"))
+        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("label_sum"),
+          count(lit(1)).as("rows"))
         .localCheckpoint(true)
-      (ckpt, () => obs.get("label_sum") match {
-        case null => java.math.BigDecimal.ZERO
-        case d: java.math.BigDecimal => d
-        case d: BigDecimal => d.bigDecimal
-      })
+      val m = obs.get
+      (GraftSqlBridge.withRowCount(ckpt, m("rows").asInstanceOf[Long]),
+        m("label_sum") match {
+          case null => java.math.BigDecimal.ZERO
+          case d: java.math.BigDecimal => d
+          case d: BigDecimal => d.bigDecimal
+        })
     }
 
     // localCheckpoint (not cache) on everything the loop rebuilds from:
     // each iteration references `labels` twice, so without lineage
     // truncation the logical plan DOUBLES per iteration — a 15-hop chain
     // builds a 2^15-node plan and analysis itself runs out of memory.
-    val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-      .localCheckpoint(true)
+    val edges = undirectedEdges(pairs).localCheckpoint(true)
     val (labels0, sum0) = observedSum(
       edges.groupBy(col("u").as("id"))
         .agg(least(min(col("v")), col("u")).as("label")))
     var labels = labels0
-    var prevSum = sum0()
+    var prevSum = sum0
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -2140,13 +1882,12 @@ object Dedup {
       // hops into one round turns diameter-many rounds into log-many.
       // `hop` is referenced twice but `labels` was checkpointed last
       // round, so the doubled subtree is one round deep, not compounding.
-      val (next, nextSumF) = observedSum(
+      val (next, nextSum) = observedSum(
         hop.join(
             hop.select(col("id").as("lid"), col("label").as("llabel")),
             col("label") === col("lid"), "left")
           .select(col("id"),
             least(col("label"), coalesce(col("llabel"), col("label"))).as("label")))
-      val nextSum = nextSumF()
       labels.unpersist()
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
@@ -2154,12 +1895,18 @@ object Dedup {
       iter += 1
     }
     edges.unpersist()
-    val (ccResult, ccFrames) = graft.util.SessionPlanMemo.localizeOrPersist(
-      labels.select(col("id"), col("label").as("component_id")), Seq.empty)
-    componentsMemo.put(pairs.sparkSession, maxIter, ccInputPlan, ccResult,
-      ccFrames)
-    ccResult
+    labels.select(col("id"), col("label").as("component_id"))
   }
+
+  /** Both directions of every pair as (u, v) rows, from ONE reference to
+   * `pairs`: a lazy pair plan then runs once inside the edge checkpoint,
+   * whether or not Spark could reuse exchanges across two scans of it. */
+  private[dedup] def undirectedEdges(pairs: DataFrame): DataFrame =
+    pairs
+      .select(explode(array(
+        struct(col("id_a").as("u"), col("id_b").as("v")),
+        struct(col("id_b").as("u"), col("id_a").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
 
   /**
    * Quality-aware representative selection: for each near-dup component,

@@ -769,7 +769,7 @@ object Resample {
    * are [[bootstrapMeanCI]]'s, plus the unit count.
    *
    * @param components (id, component_id) — e.g.
-   *        [[graft.dedup.Dedup.connectedComponents]] output (memoized)
+   *        [[graft.dedup.Dedup.connectedComponents]] output
    * @return one row: (n, sum_total, mean_scaled, n_units, n_reps,
    *         lo_rank, hi_rank, lo_num, lo_den, lo_scaled, hi_num,
    *         hi_den, hi_scaled)

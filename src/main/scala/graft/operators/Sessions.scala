@@ -16,60 +16,15 @@ import org.apache.spark.sql.functions._
  * — (us, eid) with a unique eid — so every projection of the array
  * (sequence strings, journey initials, n-th event) is deterministic and
  * engine-reproducible.
- *
- * RESULT MEMO (round 13): q145 (sequence strings) and q160 (journey
- * regex) both assemble the identical session table and used to pay the
- * full scan+shuffle+collect chain each. Same (events plan, gap, id/ts/
- * type/event columns) → the memoized table, driver-localized under
- * [[graft.util.SessionPlanMemo.LocalMemoMaxRows]] (per-session
- * coordinate rows — a session table is |sessions| rows however big the
- * log) and persist-backed beyond it. Same immutability assumption as
- * Spark's table cache; [[clearMemo]] invalidates.
  */
 object Sessions {
-
-  private[operators] final case class AssembledKey(gap: String, userCol: String,
-      tsCol: String, typeCol: String, idCol: String)
-  private[graft] val assembledMemo =
-    new graft.util.SessionPlanMemo[AssembledKey](8)
-
-  /** Drop every memoized session table for `spark` — the invalidation
-   * hook for event logs rewritten IN PLACE at an unchanged path. */
-  def clearMemo(spark: org.apache.spark.sql.SparkSession): Unit =
-    assembledMemo.clear(spark)
 
   /**
    * The assembled session table: `(user_id, session_start_us, evs)` with
    * `evs: array<struct<us: long, eid: long, et: string>>` sorted by
-   * (us, eid). EAGER on a memo miss (one probe job — the result is
-   * always consumed); repeat invocations on the same log serve the
-   * memoized table.
+   * (us, eid). Lazy — nothing runs until the caller's action.
    */
   def assembled(events: DataFrame, gap: String = "2 hours",
-      userCol: String = "user_id", tsCol: String = "ts",
-      typeCol: String = "event_type", idCol: String = "event_id"): DataFrame = {
-    val memoKey = AssembledKey(gap, userCol, tsCol, typeCol, idCol)
-    val inputPlan = events.queryExecution.analyzed
-    assembledMemo.lookup(events.sparkSession, memoKey, inputPlan) match {
-      case Some(hit) => return hit
-      case None =>
-    }
-    val built = assembledPlan(events, gap, userCol, tsCol, typeCol, idCol)
-    // 1<<17, not the slim-row default: session rows carry nested event
-    // arrays, and a localized serve re-ships them per execution —
-    // measured break-even sits between 13k sessions (~0.1 s serve, huge
-    // win) and 832k (6.2 s serve vs 1.7 s recompute, a loss).
-    val (result, frames) =
-      graft.util.SessionPlanMemo.localizeOrPersist(built, Seq.empty,
-        maxLocalRows = 1 << 17)
-    assembledMemo.put(events.sparkSession, memoKey, inputPlan, result, frames)
-    result
-  }
-
-  /** The assembly PLAN behind [[assembled]], unmemoized and lazy —
-   * exactly what executes on a memo miss, exposed for plan-shape audits
-   * and callers composing below an action. */
-  def assembledPlan(events: DataFrame, gap: String = "2 hours",
       userCol: String = "user_id", tsCol: String = "ts",
       typeCol: String = "event_type", idCol: String = "event_id"): DataFrame =
     events
@@ -88,8 +43,7 @@ object Sessions {
 
   /** The per-session event-type INITIALS as one compact string — the
    * journey alphabet regex patterns match over (q160). A projection of
-   * the same assembled array, so the memoized table serves both the
-   * sequence and journey families. */
+   * the same assembled array as [[sequenceString]]. */
   def journeyString(evs: Column): Column =
     concat_ws("", transform(evs, e => substring(e.getField("et"), 1, 1)))
 }

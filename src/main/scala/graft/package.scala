@@ -1,41 +1,18 @@
 /**
  * Library-wide facade helpers.
  *
- * == Memoized operators and the invalidation contract ==
+ * == Operator evaluation ==
  *
- * Four operator families are RESULT-MEMOIZED per session (the round-13
- * `SessionPlanMemo` pattern): the near-dup pair graph
- * ([[graft.dedup.Dedup.jaccardNearDupPairs]] and its prepared PPJoin
- * plans), connected components ([[graft.dedup.Dedup.connectedComponents]]),
- * session assembly ([[graft.operators.Sessions.assembled]]), and the
- * k-means centroid fit behind [[graft.similarity.Similarity]]'s IVF
- * operators. These operators are EAGER (one bounded probe job at call
- * time) and repeat calls on the same analyzed input plan serve the stored
- * result. Correctness rests on the same immutable-input assumption as
- * Spark's own table cache: the memo keys on the PLAN (`sameResult`), not
- * the bytes behind it, so input files rewritten IN PLACE at an unchanged
- * path would silently serve stale results. Callers that rewrite inputs in
- * place must invalidate — either per family
- * (`Dedup.clearPreparedPlans`, `Sessions.clearMemo`,
- * `Similarity.clearKmeansMemo`) or all at once via [[clearAllMemos]].
- * Callers that need the reference framework's lazy recompute-by-default
- * semantics use the unmemoized plan builders (`Dedup.nearDupPairsPlan`,
- * `Sessions.assembledPlan`), which return the exact plan a memo miss
- * executes.
+ * Operators return DataFrames that Spark plans, reuses and recomputes
+ * like any other: they are lazy, except the iterative
+ * [[graft.dedup.Dedup.connectedComponents]] and
+ * [[graft.similarity.Similarity.kmeansCentroids]], which run their rounds
+ * at call time. Nothing is cached across calls, so an input rewritten in
+ * place at an unchanged path is read afresh by the next call.
  */
 package object graft {
 
-  /** Drop EVERY per-session operator memo for `spark` and unpersist the
-   * frames they hold: prepared PPJoin plans, the near-dup pair graph,
-   * connected components, assembled session tables, and k-means
-   * centroids. The one-call invalidation hook for pipelines that rewrite
-   * input files in place at an unchanged path (see the package doc —
-   * memos, like Spark's table cache, assume immutable inputs). Safe to
-   * call at any point; subsequent operator calls recompute and re-memoize
-   * from the live files. */
-  def clearAllMemos(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.dedup.Dedup.clearPreparedPlans(spark)
-    graft.operators.Sessions.clearMemo(spark)
-    graft.similarity.Similarity.clearKmeansMemo(spark)
-  }
+  /** No-op, kept for source compatibility: operators hold no per-session
+   * result caches, so there is nothing to drop. */
+  def clearAllMemos(spark: org.apache.spark.sql.SparkSession): Unit = ()
 }

@@ -1233,10 +1233,8 @@ object CoreQueries {
     // assembly is a per-session sort_array over collected structs: groups
     // are session-sized, so nothing beyond one session ever sits in one
     // buffer, and the shuffle carries (type, ts, id) coordinates only.
-    // Round 13: the assembly itself now lives in Sessions.assembled
-    // (result-memoized) — q145 and q160 are two projections of ONE
-    // assembled session table instead of two full scan+shuffle+collect
-    // chains.
+    // The assembly itself lives in Sessions.assembled — q145 and q160 are
+    // two projections of the same assembled session plan.
     "q145_session_sequences" -> ((s, dir) => {
       graft.operators.Sessions.assembled(Tables.events(s, dir))
         .select(col("user_id"), col("session_start_us"),
@@ -1531,10 +1529,9 @@ object CoreQueries {
     // |events|), and the pattern subset (literals, classes, star — no
     // backrefs) means Java and RE2 agree symbol for symbol.
     "q160_journey_pattern" -> ((s, dir) => {
-      // Rides q145's memoized session assembly (round-13 adjudication:
-      // the regex marginal is ~0 — the whole 1.2 s row WAS the repeated
-      // assembly); initials derive from the same ordered array, so the
-      // journey string is byte-identical to the former inline build.
+      // Reuses q145's session assembly; initials derive from the same
+      // ordered array, so the journey string is byte-identical to an
+      // inline build.
       graft.operators.Sessions.assembled(Tables.events(s, dir))
         .select(col("user_id"), col("session_start_us"),
           graft.operators.Sessions.journeyString(col("evs")).as("journey"))

@@ -1923,8 +1923,8 @@ object PipelineQueries {
     // Dedup ROI in one row: what keep-min-id-per-cluster actually buys —
     // clusters, removed docs, removed TOKENS (the unit compute is billed
     // in). Σ over the q23 components joined with kernel token counts;
-    // the pair graph and components serve from the round-13 memos, so
-    // the marginal cost is a |clustered docs| coordinate join.
+    // beyond the q23 pipeline, the cost is a |clustered docs| coordinate
+    // join.
     "q214_dedup_roi" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val comps = Dedup.connectedComponents(
@@ -2035,8 +2035,8 @@ object PipelineQueries {
     // Near-dup component SOURCE SPAN: does duplicate mass cross sources
     // (syndicated/template content — dedup globally) or stay within one
     // (crawl dups — dedup per source)? Histogram of components by the
-    // distinct sources they touch; rides the memoized pair graph +
-    // components, then |component|-row folds.
+    // distinct sources they touch; the q23 pair graph + components,
+    // then |component|-row folds.
     "q237_component_span" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val comps = Dedup.connectedComponents(
@@ -2081,7 +2081,7 @@ object PipelineQueries {
 
     // Dedup threshold-sensitivity frontier: pairs/docs qualifying at
     // each candidate Jaccard threshold, from ONE pair-graph build at
-    // the loosest point (3/4 = the q14 family's memoized graph) —
+    // the loosest point (3/4 = the q14 family's graph) —
     // every tighter threshold is a post-hoc integer filter on the
     // verified (inter, uni) evidence.
     "q234_threshold_frontier" -> ((s, dir) => {
@@ -2133,7 +2133,7 @@ object PipelineQueries {
     // (cluster bootstrap): duplicated documents are not independent
     // draws, and resampling components instead of rows is the honest
     // error bar on a corpus the dedup pipeline itself says is
-    // correlated. Rides the memoized pair graph + components.
+    // correlated. Built on the q23 pair graph + components.
     "q228_cluster_bootstrap" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
       val comps = Dedup.connectedComponents(

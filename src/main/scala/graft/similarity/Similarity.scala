@@ -840,55 +840,20 @@ object Similarity {
    * the loop free of growing lineage). Empty clusters keep their
    * previous center.
    *
-   * MEMOIZED per session on (input plan `sameResult`, k, iters) — the
-   * q55/q84/q86/q127 family re-derives the identical clustering, and
-   * the result is a k·dims value table, so repeat calls skip the Lloyd
-   * loop entirely (round-11 verdict ask). Deterministic by
-   * construction, so a hit is bit-identical to a recompute. Same
-   * immutability assumption as every prepared-plan cache (and Spark's
-   * own table cache): files rewritten IN PLACE at an unchanged path
-   * require [[clearKmeansMemo]]. The payload is soft-referenced so a
-   * discarded session is never pinned by its memo entries.
+   * EAGER: the Lloyd loop runs on every call, because each iteration
+   * needs the previous centers as driver values.
    */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     centroidValuesToDf(corpus.sparkSession,
       kmeansCentroidValues(corpus, k, iters, idCol, vecCol))
 
-  /** [[kmeansCentroids]] as driver values — the memoized Lloyd loop
-   * itself. (cid, center) pairs, cid dense in [0, k). */
+  /** [[kmeansCentroids]] as driver values — the Lloyd loop itself.
+   * (cid, center) pairs, cid dense in [0, k). */
   def kmeansCentroidValues(corpus: DataFrame, k: Int, iters: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): Seq[(Int, Seq[Float])] = {
     require(k > 0 && iters >= 0, "k and iters must be positive")
-    val spark = corpus.sparkSession
     val base = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val inputPlan = base.queryExecution.analyzed
-    kmeansMemo.synchronized {
-      val entries = kmeansMemo.get(spark)
-      if (entries != null) {
-        // Expunge GC-cleared payloads (plain values — nothing to release).
-        { var i = 0
-          while (i < entries.size) {
-            if (entries(i).payload.isEmpty) entries.remove(i) else i += 1
-          } }
-        var hit: Option[(KmeansEntry, Int, Seq[(Int, Seq[Float])])] = None
-        val it = entries.zipWithIndex.iterator
-        while (hit.isEmpty && it.hasNext) {
-          val (e, i) = it.next()
-          if (e.k == k && e.iters == iters) {
-            e.payload match {
-              case Some((plan, values)) if plan.sameResult(inputPlan) =>
-                hit = Some((e, i, values))
-              case _ =>
-            }
-          }
-        }
-        hit.foreach { case (e, i, values) =>
-          entries.remove(i); entries += e
-          return values
-        }
-      }
-    }
     // Persist the slim (id, vec) projection once: init + every Lloyd
     // iteration re-reads it, and without this each of the iters+1 jobs
     // re-pays the full corpus scan (at 100 TB, the scan dominates the
@@ -932,47 +897,8 @@ object Similarity {
       iter += 1
     }
     cached.unpersist(blocking = false)
-    val result = centroids.toSeq
-    kmeansMemo.synchronized {
-      var entries = kmeansMemo.get(spark)
-      if (entries == null) {
-        entries = scala.collection.mutable.Buffer.empty
-        kmeansMemo.put(spark, entries)
-      }
-      entries += new KmeansEntry(k, iters, inputPlan, result)
-      while (entries.size > KmeansMemoMax) entries.remove(0)
-    }
-    result
+    centroids.toSeq
   }
-
-  /** Drop every memoized k-means result for `spark` — the invalidation
-   * hook for inputs rewritten IN PLACE at an unchanged path (the memo
-   * keys on the plan, not the bytes behind it). */
-  def clearKmeansMemo(spark: org.apache.spark.sql.SparkSession): Unit =
-    kmeansMemo.synchronized { kmeansMemo.remove(spark); () }
-
-  /** Memo entry: payload soft-referenced because the analyzed plan
-   * strongly references its session (via file-relation internals) — a
-   * strong value chain from the WeakHashMap would pin the KEY forever.
-   * The values are k·dims floats; losing them to GC just recomputes. */
-  private final class KmeansEntry(val k: Int, val iters: Int,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      values: Seq[(Int, Seq[Float])]) {
-    private val ref = new java.lang.ref.SoftReference((plan, values))
-    def payload: Option[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Seq[(Int, Seq[Float])])] = Option(ref.get())
-  }
-  private val KmeansMemoMax = 16
-  private val kmeansMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Buffer[KmeansEntry]]
-
-  /** Test seam: live memo entries for `spark`. */
-  private[graft] def kmeansMemoSize(
-      spark: org.apache.spark.sql.SparkSession): Int =
-    kmeansMemo.synchronized {
-      Option(kmeansMemo.get(spark)).map(_.size).getOrElse(0)
-    }
 
   /** Driver centroid values as the (cid, cvec) DataFrame every centroid
    * seam accepts. A LocalRelation — [[driverLocalCentroids]] recovers

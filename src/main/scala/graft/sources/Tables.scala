@@ -36,16 +36,15 @@ object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  /** Invalidation hook for the per-path schema caches (r17 ADVICE): the
-   * caches assume IMMUTABLE inputs — a parquet file rewritten in place at
-   * an unchanged path with a DIFFERENT schema would otherwise keep being
-   * read with the stale cached schema (wrong/null columns) where a plain
+  /** Invalidation hook for the per-path schema caches: the caches assume
+   * IMMUTABLE inputs — a parquet file rewritten in place at an unchanged
+   * path with a DIFFERENT schema would otherwise keep being read with the
+   * stale cached schema (wrong/null columns) where a plain
    * `spark.read.parquet` would re-infer. Same assumption as Spark's own
-   * table cache and the operator memos ([[graft.clearAllMemos]] — which
-   * deliberately does NOT clear this: schemas are metadata, not results,
-   * and pipelines that rewrite fixtures in place must call this hook
-   * too). Harness fixtures are immutable per run, so nothing calls it on
-   * the bench path. */
+   * table cache. Schemas are metadata, not results: operators cache no
+   * results, but pipelines that rewrite fixtures in place with a new
+   * schema must call this hook. Harness fixtures are immutable per run,
+   * so nothing calls it on the bench path. */
   def clearSchemaCache(): Unit = { schemaCache.clear(); tsTypeCache.clear() }
 
   /** Schema-cached parquet read. Assumes the file set at `path` is

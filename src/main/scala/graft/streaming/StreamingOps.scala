@@ -303,10 +303,10 @@ object StreamingOps {
    * (past that, per-batch store-commit fan-out dominates again; a
    * deployment with >128 GB of live state shards the QUERY, not just the
    * store). The floor is MEASURED, not machine-derived: 32 → 8 halved the
-   * sf0.1 stream-stream join (r13, store-commit bound), while dropping
+   * sf0.1 stream-stream join (store-commit bound), while dropping
    * further to 2 REGRESSED q147's RocksDB initial-state load 2.9 → 6.9 s
-   * (r17 ProbeStream: the whole drain is one addBatch, and two state
-   * partitions serialize a compute-bound snapshot apply) — 8 is where the
+   * (the whole drain is one addBatch, and two state partitions serialize
+   * a compute-bound snapshot apply) — 8 is where the
    * two failure modes cross at the harness's fixed per-query floor. At
    * the harness scale factors this derives the floor; past ~512 MB of
    * input it grows; at 100 TB it caps — same code, no retune.
@@ -322,17 +322,20 @@ object StreamingOps {
     val bytes =
       try fs.getContentSummary(p).getLength
       catch { case scala.util.control.NonFatal(t) =>
-        // r17 ADVICE: a listing failure on a VALID dir (permissions, a
-        // transient FS error) must not silently mis-size state stores at
-        // scale — surface the degradation, then fall back to the floor.
+        // A listing failure on a VALID dir (permissions, a transient FS
+        // error) must not silently mis-size state stores at scale —
+        // surface the degradation, then fall back to the floor.
         System.err.println(
-          s"WARN statePartitionsFor: could not size $p (${t.getMessage}); " +
-            "falling back to the floor of 8 state partitions")
+          s"WARN statePartitionsFor: could not size $p ($t); " +
+            s"falling back to the floor of $StatePartitionFloor state partitions")
         0L
       }
     val derived = math.ceil(bytes.toDouble / bytesPerPartition).toInt
-    math.max(8, math.min(derived, 2048))
+    math.max(StatePartitionFloor, math.min(derived, 2048))
   }
+
+  /** Fewest state partitions [[statePartitionsFor]] ever returns. */
+  private final val StatePartitionFloor = 8
 
   /**
    * Streaming keep-first exact dedup with duplicate accounting: one state

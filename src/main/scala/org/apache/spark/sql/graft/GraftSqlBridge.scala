@@ -32,37 +32,23 @@ object GraftSqlBridge {
     org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
       .asInstanceOf[Ordering[Any]]
 
-  /** The MATERIALIZED cache RDD id behind `df`, if the frame is registered
-   * in the session's cache manager AND its columnar buffers have actually
-   * been built (a lazy `persist` registers the plan but creates no RDD
-   * until the first materializing action). The id is a plain Int handle —
-   * it references neither the session nor the plan — so a memo can retain
-   * it after every strong/soft reference to the frame is gone and still
-   * release the cached blocks via `SparkContext.getPersistentRDDs`
-   * (see [[graft.dedup.Dedup]]'s prepared-plan store). */
-  def materializedCacheRddId(df: org.apache.spark.sql.DataFrame): Option[Int] = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).flatMap { cd =>
-      val b = cd.cachedRepresentation.cacheBuilder
-      if (b.isCachedColumnBuffersLoaded) Some(b.cachedColumnBuffers.id) else None
-    }
+  /** A checkpointed frame (`localCheckpoint`/`checkpoint` output) re-stated
+   * at `rows` rows, counted by the job that built it. A checkpoint
+   * otherwise inherits the estimate of the plan it truncated, which
+   * compounds through every join in that plan, so even a small
+   * checkpointed table plans as a sort-merge join instead of a
+   * broadcast. */
+  def withRowCount(checkpointed: org.apache.spark.sql.DataFrame,
+      rows: Long): org.apache.spark.sql.DataFrame = {
+    val session =
+      checkpointed.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val l = checkpointed.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    ofRows(session, l.copy()(session,
+      Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+        org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+          .getOutputSize(l.output, rows), Some(rows))), None))
   }
-
-  /** True iff every LogicalRDD leaf of `df`'s analyzed plan still has its
-   * blocks registered (storage level != NONE). A localCheckpoint'd frame
-   * has TRUNCATED lineage: if some external actor unpersists its block
-   * RDD (e.g. a harness resetting cache state between passes), the frame
-   * is unrecoverable — serving it from a memo would fail with
-   * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. This check detects that case so
-   * the memo can recompute instead. (Executor loss drops blocks WITHOUT
-   * resetting the level — that failure mode stays, exactly as it does for
-   * any checkpoint reuse inside a single query.) */
-  def logicalRddsServable(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves().forall {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      case _ => true
-    }
 
   /** Re-root a logical plan onto another session of the same SparkContext
    * (`Dataset.ofRows` is `private[sql]`). The cache manager lives in

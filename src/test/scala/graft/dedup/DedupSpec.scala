@@ -219,6 +219,23 @@ class DedupSpec extends AnyFunSuite {
     assert(connectedComponents(empty).collect().isEmpty)
   }
 
+  test("connectedComponents' edge list references the pair plan once") {
+    // A lazy pair plan feeds the edge checkpoint; two scans of it (a union
+    // of both directions) would run the banding pipeline twice unless
+    // Spark happened to reuse its exchanges.
+    val pairs = jaccardNearDupPairs(
+      docs(1L -> "the quick brown fox jumps", 2L -> "the quick brown fox jumped"),
+      1, 2, k = 16, rows = 2, shingleWidth = 3)
+    def cappedCollectors(df: DataFrame): Int =
+      df.queryExecution.analyzed.map(_.expressions.map(_.collect {
+        case c: CollectListCapped => c }.size).sum).sum
+    val inPairs = cappedCollectors(pairs)
+    assert(inPairs >= 1, "pair plan has no banding aggregate")
+    assert(cappedCollectors(undirectedEdges(pairs)) === inPairs)
+    assert(undirectedEdges(pairs).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSet === Set((1L, 2L), (2L, 1L)))
+  }
+
   test("keepBest keeps the highest-scoring member per component, ties to smallest id") {
     import spark.implicits._
     val comps = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L))
@@ -1220,145 +1237,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got2.isEmpty, "same-split repeats must not be flagged")
   }
 
-  // ------------------------------------------- prepared-plan memo bounds
-
-  test("ngramJaccardPairs memo: a threshold-sweeping session stays LRU-bounded and evictions unpersist") {
-    val d = docs((1L to 20L).map(i => i -> s"the quick brown fox $i jumps"): _*)
-    Dedup.clearPreparedPlans(spark)
-    val baseRdds = spark.sparkContext.getPersistentRDDs.keySet
-    // 12 distinct parameterizations > the LRU cap; each runs an action so
-    // its candidates cache actually materializes (persist is lazy).
-    val dens = Seq(10, 11, 12, 13, 14, 15, 16, 17, 18, 19, 20, 21)
-    dens.foreach { den => ngramJaccardPairs(d, 7, den).count() }
-    val (entries, persisted) = Dedup.preparedPpjoinStats(spark)
-    assert(entries <= 8, s"memo holds $entries entries — LRU cap lost")
-    val newRdds = spark.sparkContext.getPersistentRDDs.keySet -- baseRdds
-    // One persisted frame (candidates) per LIVE entry; evicted sweeps'
-    // frames must be gone from the block manager, not just the memo.
-    assert(newRdds.size <= 8,
-      s"${newRdds.size} persisted RDDs after a 12-point sweep — evictions leak caches")
-    assert(persisted <= entries)
-    // A hit on a live entry returns the memoized frame (same result).
-    val again = ngramJaccardPairs(d, 7, 21)
-    assert(Dedup.preparedPpjoinStats(spark)._1 === entries)
-    assert(again.count() >= 0L)
-    // Invalidation hook: everything dropped and unpersisted.
-    Dedup.clearPreparedPlans(spark)
-    assert(Dedup.preparedPpjoinStats(spark) === ((0, 0)))
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- baseRdds).isEmpty,
-      "clearPreparedPlans left persisted intermediates behind")
-    // And the operator still works from a cold memo.
-    assert(ngramJaccardPairs(d, 7, 10).columns.toSeq ===
-      Seq("id_a", "id_b", "inter", "uni"))
-  }
-
-  test("ngramJaccardPairs memo: a GC-cleared payload still releases its cached RDDs") {
-    val d = docs((1L to 20L).map(i => i -> s"the quick brown fox $i jumps"): _*)
-    Dedup.clearPreparedPlans(spark)
-    val baseRdds = spark.sparkContext.getPersistentRDDs.keySet
-    // Materialize once (registers + builds the candidates cache), then hit
-    // once more: the hit path is where the entry refreshes its RDD-id
-    // unpersist handles from the now-materialized frames.
-    ngramJaccardPairs(d, 7, 10).count()
-    ngramJaccardPairs(d, 7, 10).count()
-    val entries = Dedup.preparedPpjoinEntries(spark)
-    assert(entries.nonEmpty)
-    val ids = entries.flatMap(_.knownCacheRddIds).toSet
-    assert(ids.nonEmpty, "memo hit captured no cache RDD ids — the " +
-      "GC-cleared unpersist fallback would have nothing to release")
-    assert(ids.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
-    // Simulate the soft payload being cleared under memory pressure, then
-    // invalidate: the frames are unreachable, so only the id fallback can
-    // free the blocks. Before this fix, these RDDs leaked unboundedly.
-    entries.foreach(_.simulatePayloadClear())
-    Dedup.clearPreparedPlans(spark)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- baseRdds).isEmpty,
-      "GC-cleared memo payload leaked persisted intermediates")
-    Dedup.clearPreparedPlans(spark)
-  }
-
-  // -------------------------------- near-dup pair-graph / components memo
-
-  private def localLeavesOnly(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectLeaves().forall(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-
-  /** The bench harness's per-query isolation: drop ALL cluster cache
-   * state (table cache + every persistent RDD, checkpoints included). */
-  private def resetClusterCaches(): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-  }
-
-  test("jaccardNearDupPairs memo: repeat invocation serves the driver-local result across a full cache reset") {
-    val d = docs(
-      1L -> "the quick brown fox jumps over the lazy dog again and again",
-      2L -> "the quick brown fox jumps over the lazy dog again and again!",
-      3L -> "completely different content with no overlap whatsoever here")
-    Dedup.clearPreparedPlans(spark)
-    val first = jaccardNearDupPairs(d, 1, 2, rows = 4, shingleWidth = 5)
-    val firstRows = first.collect().toSeq
-    assert(firstRows.nonEmpty, "fixture must produce at least one pair")
-    // Fixture-sized pair lists ride the driver — nothing cluster-side to
-    // lose, the kmeansMemo survival property.
-    assert(localLeavesOnly(first),
-      "a pair list under the local bound must memoize as a LocalRelation")
-    resetClusterCaches()
-    val second = jaccardNearDupPairs(d, 1, 2, rows = 4, shingleWidth = 5)
-    assert(second eq first,
-      "repeat invocation must serve the memoized frame, not rebuild")
-    assert(second.collect().toSeq === firstRows)
-    // Different parameters or input: a genuine miss.
-    val other = jaccardNearDupPairs(d, 3, 4, rows = 4, shingleWidth = 5)
-    assert(!(other eq first))
-    Dedup.clearPreparedPlans(spark)
-  }
-
-  test("connectedComponents memo: the iterative chain runs once; hits survive a cache reset; clear hook recomputes") {
-    val p = {
-      import spark.implicits._
-      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    }
-    Dedup.clearPreparedPlans(spark)
-    val first = connectedComponents(p)
-    val firstRows = first.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-    assert(firstRows.toSet ===
-      Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
-    assert(localLeavesOnly(first),
-      "a component table under the local bound must memoize as a LocalRelation")
-    resetClusterCaches()
-    // Hit: the SAME frame comes back — no checkpoint jobs, and collecting
-    // a LocalRelation cannot trip over the dropped checkpoint blocks.
-    val second = connectedComponents(p)
-    assert(second eq first,
-      "repeat invocation must serve the memoized component table")
-    assert(second.collect().length === firstRows.length)
-    // maxIter is part of the key — a different bound is a different entry.
-    val bounded = connectedComponents(p, maxIter = 5)
-    assert(!(bounded eq first))
-    // Invalidation drops both new memos; the operator recomputes cold.
-    Dedup.clearPreparedPlans(spark)
-    assert(Dedup.componentsMemo.stats(spark) === ((0, 0)))
-    assert(Dedup.nearDupPairsMemo.stats(spark) === ((0, 0)))
-    val third = connectedComponents(p)
-    assert(!(third eq first))
-    assert(third.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))).toSet
-      === firstRows.toSet)
-    Dedup.clearPreparedPlans(spark)
-  }
-
-  test("logicalRddsServable: a localCheckpoint'd frame stops being servable when its blocks are unpersisted") {
-    import org.apache.spark.sql.graft.GraftSqlBridge
-    val df = spark.range(100).toDF("v").localCheckpoint(true)
-    assert(GraftSqlBridge.logicalRddsServable(df),
-      "freshly checkpointed frame must be servable")
-    resetClusterCaches()
-    assert(!GraftSqlBridge.logicalRddsServable(df),
-      "an unpersisted checkpoint must be detected as dead")
-    // And a plain scan (no LogicalRDD leaves) is always servable.
-    assert(GraftSqlBridge.logicalRddsServable(spark.range(5).toDF("v")))
-  }
   test("lshCalibrationAudit: estimate brackets the exact Jaccard; identity pairs max out") {
     val base = "the quick brown fox jumps over the lazy dog while the cat sleeps " * 3
     val corpus = docs(
@@ -1411,7 +1289,6 @@ class DedupSpec extends AnyFunSuite {
     // The exact-dup pair must survive J = 1; the near-dup must not.
     val atOne = out.find(t => (t._1, t._2) == ((1L, 1L))).get
     assert(atOne._3 === 1L && atOne._4 === 2L)
-    Dedup.clearPreparedPlans(spark)
   }
 
   test("thresholdFrontier guards: empty, bad rational, duplicates") {

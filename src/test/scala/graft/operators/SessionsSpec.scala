@@ -32,7 +32,6 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("assembled: sessions split on the gap, events totally ordered by (ts, id)") {
-    Sessions.clearMemo(spark)
     val out = Sessions.assembled(events())
       .orderBy("user_id", "session_start_us").collect()
     assert(out.length === 3)
@@ -47,11 +46,9 @@ class SessionsSpec extends AnyFunSuite {
     val u2 = out(2)
     assert(u2.getSeq[org.apache.spark.sql.Row](2).map(_.getLong(1))
       === Seq(19L, 20L, 21L))
-    Sessions.clearMemo(spark)
   }
 
   test("sequenceString/journeyString: projections of one assembled array") {
-    Sessions.clearMemo(spark)
     val out = Sessions.assembled(events())
       .select(col("user_id"),
         Sessions.sequenceString(col("evs")).as("seq"),
@@ -60,30 +57,5 @@ class SessionsSpec extends AnyFunSuite {
     val byUser = out.map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     assert(byUser.contains((1L, "signup>view", "sv")))
     assert(byUser.contains((2L, "click>view>purchase", "cvp")))
-    Sessions.clearMemo(spark)
-  }
-
-  test("assembled memo: repeat invocation serves the localized table across a cache reset; gap is part of the key") {
-    Sessions.clearMemo(spark)
-    val ev = events()
-    val first = Sessions.assembled(ev)
-    val rows = first.collect().toSeq
-    assert(first.queryExecution.analyzed.collectLeaves().forall(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
-      "a fixture-sized session table must localize")
-    // The bench harness's per-query isolation must not evict the payload.
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    val second = Sessions.assembled(ev)
-    assert(second eq first, "repeat invocation must serve the memoized table")
-    assert(second.collect().toSeq === rows)
-    // A different gap is a different session table, never a false hit.
-    val other = Sessions.assembled(ev, gap = "1 minute")
-    assert(!(other eq first))
-    assert(other.count() > first.count(),
-      "a 1-minute gap must split more sessions than 2 hours")
-    Sessions.clearMemo(spark)
-    assert(Sessions.assembledMemo.stats(spark) === ((0, 0)))
   }
 }

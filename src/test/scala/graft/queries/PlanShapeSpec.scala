@@ -145,12 +145,9 @@ class PlanShapeSpec extends AnyFunSuite with graft.testutil.OpenStreamLeakCheck 
   }
 
   test("minhash LSH never materializes a cartesian product") {
-    // nearDupPairsPlan is the UNMEMOIZED builder — exactly the tree a
-    // jaccardNearDupPairs memo miss executes, kept lazy so the whole
-    // banding pipeline stays in one inspectable plan (the memoized entry
-    // point eagerly localizes its result, which would hide the banding
-    // stage from this assertion).
-    val df = graft.dedup.Dedup.nearDupPairsPlan(
+    // The operator is lazy, so the whole banding pipeline stays in one
+    // inspectable plan.
+    val df = graft.dedup.Dedup.jaccardNearDupPairs(
       graft.sources.Tables.documents(spark, sf),
       thresholdNum = 3, thresholdDen = 4, rows = 4, shingleWidth = 10,
       materializeCandidates = false)
