@@ -12,11 +12,12 @@ import org.apache.spark.sql.Column
  * banded Hamming search.
  *
  * The scaling contract for every near-dup path here is the same:
- *  - The all-pairs comparison NEVER materializes; candidates come from an
- *    equi-join on (band, bucket).
+ *  - The all-pairs comparison NEVER materializes; candidates are the ids
+ *    sharing a (band, bucket), listed by [[Banding.bucketPairs]].
  *  - Band rows carry ONLY (band, bucket, id) — never document payloads —
- *    so the LSH shuffle is O(docs × bands × 24 bytes). Shingle sets are
- *    joined back for candidate pairs only.
+ *    so the LSH shuffle is O(docs × bands × 24 bytes); SimHash adds its
+ *    8-byte sim, which verifies a pair in place. Shingle sets are joined
+ *    back for candidate pairs only.
  *  - Signatures come from single-pass kernels ([[MinHashSignature]],
  *    [[SimHash64]]), not per-hash-function expression evaluation.
  *  - Thresholds are integer rationals (`den·inter >= num·union`); no float
@@ -124,47 +125,12 @@ object Dedup {
   def jaccardNearDupPairs(docs: DataFrame, thresholdNum: Int, thresholdDen: Int,
       k: Int = 128, rows: Int = 4, shingleWidth: Int = 5,
       maxBucketSize: Int = 4096,
-      idCol: String = "doc_id", textCol: String = "text",
-      materializeCandidates: Boolean = false): DataFrame = {
-    val banded = lshBanded(docs, k, rows, shingleWidth, idCol, textCol)
-
-    // Pairs come from grouping each bucket and expanding in-bucket
-    // combinations — ONE aggregation over the banded rows, instead of a
-    // self-join that would re-evaluate the signature subtree per side.
-    // The capped collector bounds per-bucket aggregation state at
-    // `maxBucketSize` values while still counting the true bucket size, so
-    // a hot bucket can be detected and skipped instead of OOMing (see
-    // the `maxBucketSize` scaladoc above).
-    val candidatePairs = banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(GraftSqlBridge.column(CollectListCapped(
-        GraftSqlBridge.expression(col("id")), maxBucketSize)
-        .toAggregateExpression()).as("cl"))
-      .filter(col("cl.total") > 1 && col("cl.total") <= maxBucketSize)
-      .select(col("cl.ids").as("ids"))
-      .select(explode(flatten(transform(col("ids"), a =>
-        transform(col("ids"), b => struct(a.as("id_a"), b.as("id_b")))))).as("p"))
-      .filter(col("p.id_a") < col("p.id_b"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
-
-    // The candidate table feeds three consumers (the pair join and both
-    // sides of the verification semi-join). Catalyst's ReuseExchange
-    // already runs the pipeline once and shares the shuffled result, so
-    // the default stays lazy (measured: materialization is pure overhead
-    // here). The knob remains for plans where exchange reuse cannot
-    // apply — e.g. the pair list feeding several SEPARATE downstream
-    // jobs — and uses persist (lazy, lineage-preserving) so an executor
-    // loss recomputes lost blocks instead of failing the job.
-    val candidates =
-      if (materializeCandidates)
-        candidatePairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else candidatePairs
-
-    verifyJaccardCandidates(docs, candidates, thresholdNum,
-      thresholdDen, shingleWidth, idCol, textCol)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    verifyJaccardCandidates(docs,
+      Banding.bucketPairs(lshBanded(docs, k, rows, shingleWidth, idCol, textCol),
+        maxBucketSize, grid = 1),
+      thresholdNum, thresholdDen, shingleWidth, idCol, textCol)
       .orderBy("id_a", "id_b")
-  }
 
   /**
    * Exact-verification tail shared by [[jaccardNearDupPairs]] and the
@@ -310,14 +276,12 @@ object Dedup {
       idCol: String, textCol: String, auditable: Boolean = false): DataFrame = {
     val bands = k / rows
     require(k % rows == 0, s"signature length $k must be divisible by rows-per-band $rows")
-    def bandKey(b: Int): Column = {
-      val sl = slice(col("sig"), b * rows + 1, rows)
+    def bandKey(b: Int): Column =
       if (auditable)
         graft.operators.Sampling.md5Hash64(
-          concat_ws(",", lit(b).cast("string"),
-            concat_ws(",", transform(sl, _.cast("string")))))
-      else xxhash64(lit(b), sl)
-    }
+          concat_ws(",", lit(b).cast("string"), concat_ws(",",
+            transform(slice(col("sig"), b * rows + 1, rows), _.cast("string")))))
+      else Banding.bandKey(col("sig"), b, rows)
     docs
       .select(col(idCol).as("id"), shingles(col(textCol), shingleWidth).as("sh"))
       .select(col("id"), minhashSignature(col("sh"), k, auditable).as("sig"))
@@ -347,27 +311,6 @@ object Dedup {
         .select("band", "bucket"),
       maxBucketSize)
 
-  /**
-   * LSH OPERATING-POINT calibration audit: for every bucket-collision
-   * candidate pair of the AUDITABLE banding, the MinHash agreement
-   * estimate (matching signature components out of k — an unbiased
-   * estimator of Jaccard, E[matches/k] = J) next to the EXACT shingle
-   * Jaccard — the measurement that validates the banding parameters
-   * against the corpus they actually run on before anyone trusts the
-   * detection-probability curve 1 − (1 − J^rows)^bands. Candidates
-   * include the false positives verification would drop; those are the
-   * calibration's whole point. Everything ships as integers
-   * ((inter, uni) and (sig_matches, sig_k)) so any engine re-derives
-   * the audit bit-for-bit — md5-auditable hashing end to end.
-   *
-   * Scale contract: candidate expansion is the same capped-bucket
-   * aggregation as [[jaccardNearDupPairs]] (one aggregation over
-   * (band, bucket, id) coordinate rows, hot buckets skipped, never
-   * all-pairs); shingle sets and signatures recompute only for the
-   * candidate sliver behind a semi-join.
-   *
-   * @return (id_a, id_b, inter, uni, sig_matches, sig_k) ordered by pair
-   */
   /**
    * Dedup threshold-sensitivity frontier: how many near-dup PAIRS and
    * how many DOCUMENTS qualify at each candidate Jaccard threshold —
@@ -423,18 +366,18 @@ object Dedup {
           lit(i.toLong).as("t_rank"))
       }: _*)).as("t"))
       .select(col("t.t_num"), col("t.t_den"), col("t.t_rank")))
-    val qual = pairs.crossJoin(tdf)
+    // Both counts from ONE reference to the pair plan: every qualifying
+    // pair contributes one row per endpoint, so the (threshold, id) groups
+    // number n_docs and their sizes sum to 2·n_pairs.
+    val counts = pairs.crossJoin(tdf)
       .filter(col("inter") * col("t_den") >= col("uni") * col("t_num"))
-    val nPairs = qual.groupBy(col("t_num"), col("t_den"))
-      .agg(count(lit(1)).as("n_pairs"))
-    val nDocs = qual
       .select(col("t_num"), col("t_den"),
         explode(array(col("id_a"), col("id_b"))).as("id"))
-      .distinct()
+      .groupBy(col("t_num"), col("t_den"), col("id"))
+      .agg(count(lit(1)).as("deg"))
       .groupBy(col("t_num"), col("t_den"))
-      .agg(count(lit(1)).as("n_docs"))
-    tdf.join(nPairs, Seq("t_num", "t_den"), "left")
-      .join(nDocs, Seq("t_num", "t_den"), "left")
+      .agg(expr("sum(deg) div 2").as("n_pairs"), count(lit(1)).as("n_docs"))
+    tdf.join(counts, Seq("t_num", "t_den"), "left")
       .select(col("t_num"), col("t_den"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
@@ -443,23 +386,33 @@ object Dedup {
       .drop("t_rank")
   }
 
+  /**
+   * LSH OPERATING-POINT calibration audit: for every bucket-collision
+   * candidate pair of the AUDITABLE banding, the MinHash agreement
+   * estimate (matching signature components out of k — an unbiased
+   * estimator of Jaccard, E[matches/k] = J) next to the EXACT shingle
+   * Jaccard — the measurement that validates the banding parameters
+   * against the corpus they actually run on before anyone trusts the
+   * detection-probability curve 1 − (1 − J^rows)^bands. Candidates
+   * include the false positives verification would drop; those are the
+   * calibration's whole point. Everything ships as integers
+   * ((inter, uni) and (sig_matches, sig_k)) so any engine re-derives
+   * the audit bit-for-bit — md5-auditable hashing end to end.
+   *
+   * Scale contract: candidates come from [[Banding.bucketPairs]] with
+   * the bucket cap, as in [[jaccardNearDupPairs]] (one aggregation over
+   * (band, bucket, id) coordinate rows, hot buckets skipped, never
+   * all-pairs); shingle sets and signatures recompute only for the
+   * candidate sliver behind a semi-join.
+   *
+   * @return (id_a, id_b, inter, uni, sig_matches, sig_k) ordered by pair
+   */
   def lshCalibrationAudit(docs: DataFrame, k: Int = 16, rows: Int = 4,
       shingleWidth: Int = 10, maxBucketSize: Int = 4096,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val banded = lshBanded(docs, k, rows, shingleWidth, idCol, textCol,
-      auditable = true)
-    val candidates = banded
-      .groupBy(col("band"), col("bucket"))
-      .agg(GraftSqlBridge.column(CollectListCapped(
-        GraftSqlBridge.expression(col("id")), maxBucketSize)
-        .toAggregateExpression()).as("cl"))
-      .filter(col("cl.total") > 1 && col("cl.total") <= maxBucketSize)
-      .select(col("cl.ids").as("ids"))
-      .select(explode(flatten(transform(col("ids"), a =>
-        transform(col("ids"), b => struct(a.as("id_a"), b.as("id_b")))))).as("p"))
-      .filter(col("p.id_a") < col("p.id_b"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .distinct()
+    val candidates = Banding.bucketPairs(
+      lshBanded(docs, k, rows, shingleWidth, idCol, textCol, auditable = true),
+      maxBucketSize, grid = 1)
     val candIds = candidates.select(col("id_a").as("id"))
       .union(candidates.select(col("id_b").as("id")))
     val candSig = docs.select(col(idCol).as("id"), col(textCol).as("txt"))
@@ -501,19 +454,21 @@ object Dedup {
           .as("buckets_dropped"),
         coalesce(max(col("n")), lit(0L)).as("largest_bucket"))
 
-  /** [[bucketStats]] over the SQS(8) simhash banding that drives
-   * [[simhashNearDupPairs]] — the AUDITABLE twin of [[lshBucketStats]]:
-   * with `auditable = true` the simhash (and therefore every band key) is
+  /** [[bucketStats]] over the SQS(8) simhash banding of
+   * [[simhashNearDupPairs]] — the AUDITABLE twin of [[lshBucketStats]].
+   * That operator applies no bucket cap (Hamming ≤ 3 completeness needs
+   * every in-bucket pair), so `buckets_dropped` counts the buckets a cap
+   * of `maxBucketSize` WOULD skip: the hot-bucket read before a run. With
+   * `auditable = true` the simhash (and therefore every band key) is
    * md5-derived, so any engine can re-derive the exact
-   * `(n_buckets, buckets_dropped, largest_bucket)` row off-Spark and audit
-   * the drop accounting itself, not just trust it. Same cost shape as the
-   * minhash variant: one kernel pass, one two-level aggregation. */
+   * `(n_buckets, buckets_dropped, largest_bucket)` row off-Spark. Same
+   * cost shape as the minhash variant: one kernel pass, one two-level
+   * aggregation. */
   def simhashBucketStats(docs: DataFrame, maxBucketSize: Int = 4096,
       auditable: Boolean = false,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     bucketStats(
-      simhashBanded(docs, auditable, idCol, textCol)
-        .select(col("band"), col("value").as("bucket")),
+      simhashBanded(docs, auditable, idCol, textCol).select("band", "bucket"),
       maxBucketSize)
 
   // ------------------------------------------------------ exact ngram jaccard
@@ -582,8 +537,7 @@ object Dedup {
    * cache materializes every gram array of every doc and pays
    * serialization where the pipeline only needs the exploded stream (a
    * `.count()` probe suggests the opposite only because count lets
-   * Catalyst prune the verify columns entirely — same trap as
-   * jaccardNearDupPairs' knob, whose scaladoc reached the same verdict).
+   * Catalyst prune the verify columns entirely).
    * `materializeCandidates` therefore stays OFF by default and exists for
    * callers fanning the result into several SEPARATE jobs, where exchange
    * reuse cannot apply; it additionally persists the gram sets (hash
@@ -1083,7 +1037,7 @@ object Dedup {
    * chunks extend to a triple, SQS puts that triple inside exactly one
    * block, and that block's complement is itself a block sharing no chunk
    * with the damage — an intact band. Same Hamming ≤ 3 completeness at
-   * 1/5 the banding fan-out: 14 rows × 24 bytes ≈ 0.3 KB/doc on the
+   * 1/5 the banding fan-out: 14 rows × 32 bytes ≈ 0.45 KB/doc on the
    * shuffle (the covering property is asserted exhaustively in DedupSpec;
    * document payloads never ride this shuffle at all).
    */
@@ -1091,26 +1045,12 @@ object Dedup {
       auditable: Boolean = false,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(maxHamming <= 3, "SQS(8) 4-chunk banding is complete only for Hamming <= 3")
-    def simOf(df: DataFrame): DataFrame = df.select(col("id"),
-      simhash64(TextAnalysis.tokens(col("txt")), auditable).as("sim"))
-    val base = docs.select(col(idCol).as("id"), col(textCol).as("txt"))
-    val banded = simhashBanded(docs, auditable, idCol, textCol)
-    val l = banded.select(col("band"), col("value"), col("id").as("id_a"))
-    val r = banded.select(col("band"), col("value"), col("id").as("id_b"))
-    val candidates = l.join(r, Seq("band", "value"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // Verification joins each side against a recomputed (id, sim) table.
-    // Unlike the jaccard verifier there is no candidate semi-join on the
-    // documents here, deliberately: a semi-join would shuffle TEXT payloads
-    // to save re-running a map-side kernel, but sims are 8 bytes — at any
-    // scale, shuffling n×16-byte (id, sim) rows beats shuffling n×(text)
-    // ones, and the kernel re-evaluation costs no shuffle at all.
-    val sims = simOf(base)
-    candidates
-      .join(sims.select(col("id").as("id_a"), col("sim").as("sim_a")), "id_a")
-      .join(sims.select(col("id").as("id_b"), col("sim").as("sim_b")), "id_b")
+    // Uncapped: a skipped bucket would break Hamming <= 3 completeness.
+    // The sim rides the band members, so each candidate pair is verified
+    // where it is enumerated: no second simhash pass over the text and no
+    // join back to an (id, sim) table.
+    Banding.bucketPairs(simhashBanded(docs, auditable, idCol, textCol),
+        Banding.Uncapped, grid = 1)
       .select(col("id_a"), col("id_b"),
         bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1125,7 +1065,7 @@ object Dedup {
    * distance. The SQS(8) banding is COMPLETE for Hamming <= 3, so unlike
    * the MinHash path this one is exact by construction, not just at an
    * operating point. Same scale contract as the jaccard variant: the join
-   * fans out linearly in the batch's bucket occupancy, (band, value, id)
+   * fans out linearly in the batch's bucket occupancy, (band, bucket, id)
    * coordinates only, and at 100 TB the corpus banding is stored state
    * probed zero-exchange by each increment.
    *
@@ -1139,10 +1079,10 @@ object Dedup {
       df.select(col(idCol).as(as),
         simhash64(TextAnalysis.tokens(col(textCol)), auditable).as(s"sim_$as"))
     val bb = simhashBanded(batch, auditable, idCol, textCol)
-      .select(col("band"), col("value"), col("id").as("batch_id"))
+      .select(col("band"), col("bucket"), col("id").as("batch_id"))
     val cb = simhashBanded(corpus, auditable, idCol, textCol)
-      .select(col("band"), col("value"), col("id").as("corpus_id"))
-    bb.join(cb, Seq("band", "value"))
+      .select(col("band"), col("bucket"), col("id").as("corpus_id"))
+    bb.join(cb, Seq("band", "bucket"))
       .select(col("batch_id"), col("corpus_id"))
       .dropDuplicates("batch_id", "corpus_id")
       .join(simOf(batch, "batch_id"), "batch_id")
@@ -1153,12 +1093,14 @@ object Dedup {
       .orderBy("batch_id", "corpus_id")
   }
 
-  /** (id, band, value) rows of the SQS(8) simhash banding — 24 bytes per
-   * row, no sim and no text on the fan-out (the 8-byte sim would otherwise
-   * ride the 14-way shuffle 14 times per doc). Shared by
-   * [[simhashNearDupPairs]] (candidate join) and [[simhashBucketStats]]
-   * (drop accounting), so the audited stats describe the exact banding
-   * the join uses. */
+  /** (id, sim, band, bucket) rows of the SQS(8) simhash banding — 32
+   * bytes per row, no text on the fan-out. The 8-byte sim rides it so
+   * [[simhashNearDupPairs]] verifies candidates inside the bucket
+   * aggregation; recomputing it instead means a second tokenize-and-hash
+   * pass over every document's text plus two joins back. Shared with
+   * [[simhashBucketStats]] (drop accounting) and
+   * [[incrementalSimhashNearDup]], so the audited stats describe the
+   * exact banding the pairs come from. */
   private def simhashBanded(docs: DataFrame, auditable: Boolean,
       idCol: String, textCol: String): DataFrame = {
     val chunk = (c: Int) => shiftright(col("sim"), c * 8).bitwiseAND(0xFFL)
@@ -1169,39 +1111,12 @@ object Dedup {
     }
     docs.select(col(idCol).as("id"),
         simhash64(TextAnalysis.tokens(col(textCol)), auditable).as("sim"))
-      .select(col("id"), posexplode(array(bandKeys: _*)).as(Seq("band", "value")))
+      .select(col("id"), col("sim"),
+        posexplode(array(bandKeys: _*)).as(Seq("band", "bucket")))
   }
 
   // ---------------------------------------------------------- span scrubbing
 
-  /**
-   * Substring-level dedup SCRUB: remove cross-document repeated token
-   * spans from every document, keeping exactly one occurrence corpus-wide
-   * — the apply step downstream of repeated-span DETECTION (q64's
-   * coordinates), in the style of span-level training-data dedup: long
-   * verbatim repeats (licenses, navigation chrome, quoted boilerplate)
-   * are deleted everywhere except their first occurrence.
-   *
-   * Semantics, fully deterministic:
-   *  - a span is any `w`-token window (stride 1) whose md5-64 hash occurs
-   *    in MORE THAN ONE document (within-doc repetition is repetition, not
-   *    cross-doc duplication — q34's filters own that signal);
-   *  - for each such hash, the occurrence with the smallest `(id, start)`
-   *    is the KEEPER; every other occurrence marks its `w` token positions
-   *    for removal;
-   *  - a document's cleaned text is its surviving tokens joined by single
-   *    spaces (whitespace is not preserved — the output feeds tokenizers,
-   *    not renderers). A keeper's tokens can still fall to an OVERLAPPING
-   *    removed span; removal is coverage-based, which keeps the rule
-   *    one-pass and engine-reproducible.
-   *
-   * Scale contract: the shuffle carries (hash, id, start) coordinate rows
-   * and per-doc removal-start arrays — never text. Removal itself is a
-   * per-row projection (`filter` over the token array against the doc's
-   * own removal starts, at most |tokens| · |spans| compares against
-   * arrays bounded by document length). Output: (idCol, n_tokens,
-   * n_removed, clean_text).
-   */
   /**
    * (id, start, gh) for every `w`-token window whose CONTENT may repeat
    * across documents: a Rabin–Karp fingerprint pass finds the windows
@@ -1312,6 +1227,34 @@ object Dedup {
         min(col("start")).cast("long").as("first_leaky_start"))
   }
 
+  /**
+   * Substring-level dedup SCRUB: remove cross-document repeated token
+   * spans from every document, keeping exactly one occurrence corpus-wide
+   * — the apply step downstream of repeated-span DETECTION (q64's
+   * coordinates), in the style of span-level training-data dedup: long
+   * verbatim repeats (licenses, navigation chrome, quoted boilerplate)
+   * are deleted everywhere except their first occurrence.
+   *
+   * Semantics, fully deterministic:
+   *  - a span is any `w`-token window (stride 1) whose md5-64 hash occurs
+   *    in MORE THAN ONE document (within-doc repetition is repetition, not
+   *    cross-doc duplication — q34's filters own that signal);
+   *  - for each such hash, the occurrence with the smallest `(id, start)`
+   *    is the KEEPER; every other occurrence marks its `w` token positions
+   *    for removal;
+   *  - a document's cleaned text is its surviving tokens joined by single
+   *    spaces (whitespace is not preserved — the output feeds tokenizers,
+   *    not renderers). A keeper's tokens can still fall to an OVERLAPPING
+   *    removed span; removal is coverage-based, which keeps the rule
+   *    one-pass and engine-reproducible.
+   *
+   * Scale contract: the shuffle carries (hash, id, start) coordinate rows
+   * and per-doc removal-start arrays — never text. Removal itself is a
+   * per-row projection (`filter` over the token array against the doc's
+   * own removal starts, at most |tokens| · |spans| compares against
+   * arrays bounded by document length). Output: (idCol, n_tokens,
+   * n_removed, clean_text).
+   */
   def spanDedupScrub(docs: DataFrame, w: Int = 16,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(w > 0, s"span width must be positive, got $w")

@@ -298,9 +298,10 @@ case class CollectListCapped(
 
   override def eval(buffer: CappedListBuffer): Any = {
     if (buffer.total > cap) {
-      // Executor-side accounting that survives every optimizer rewrite: the
-      // observed-metrics route (Dedup attaches one) is invisible when AQE
-      // collapses an empty downstream plan, but this log line always fires.
+      // Executor-side accounting that survives every optimizer rewrite:
+      // whatever AQE does to the plan downstream, an overflowing group
+      // logs here. Exact drop counts are a separate query
+      // (Dedup.lshBucketStats / simhashBucketStats).
       CollectListCapped.log.warn(
         s"collect_list_capped: group of ${buffer.total} values exceeded cap $cap; " +
           s"retained the first $cap")

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.dedup.Banding
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -280,8 +281,8 @@ object Similarity {
     // reuse never fires (measured: the "shared" exchange formulation ran
     // the scoring TWICE here). The cache manager substitutes this one
     // materialized table for both reads at planning time regardless of
-    // what each consumer prunes. Lazy + lineage-preserving, same
-    // contract as cosineNearDupPairs' band cache.
+    // what each consumer prunes. Lazy (no job at construction) and
+    // lineage-preserving (executor loss recomputes lost blocks).
     val avgs = scored
       .select(col("cos"), explode(array(
         struct(lit(0).as("ep"), col("a_id").as("id")),
@@ -351,13 +352,14 @@ object Similarity {
    * `bucketGrid` (LSH path only) is the hot-bucket insurance: a bucket of
    * n members costs C(n, 2) candidate enumerations, and that work is
    * INDIVISIBLE under plain (band, bucket)-keyed execution — AQE skew
-   * splitting cannot help (a self-join explosion needs BOTH sides of the
-   * bucket whole) and salting cannot either (a salted bucket would miss
+   * splitting cannot help (the pair expansion needs the whole bucket in
+   * one group) and salting cannot either (a salted bucket would miss
    * cross-salt pairs). With `bucketGrid = g > 1` each bucket's members
    * sub-block by id hash and the g·(g+1)/2 grid cells become independent
-   * join keys ([[groupedIdPairs]] — the same cell scheme as the exact
-   * path's nBlocks grid, applied inside each bucket), so one mega-bucket
-   * parallelizes across ~g²/2 tasks instead of serializing into one.
+   * aggregation keys ([[graft.dedup.Banding.bucketPairs]] — the same cell
+   * scheme as the exact path's nBlocks grid, applied inside each bucket),
+   * so one mega-bucket parallelizes across ~g²/2 tasks instead of
+   * serializing into one.
    * Band rows ship ~g/2 times more, so leave the default 1 when banding
    * is sound (many small buckets) and raise it when the bucket histogram
    * is hot — e.g. aggressive recall configs with few bits per band, or a
@@ -366,33 +368,16 @@ object Similarity {
   def cosineNearDupPairs(embeddings: DataFrame, threshold: Double,
       lshBits: Int = 0, rowsPerBand: Int = 2, dims: Int = 64, nBlocks: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      materializeBands: Boolean = true, bucketGrid: Int = 1): DataFrame = {
+      bucketGrid: Int = 1): DataFrame = {
     val base = embeddings.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val candidates =
       if (lshBits <= 0) {
-        // Deterministic block assignment; the hash (not raw id) guards
-        // against clustered id ranges landing whole blocks on one key.
-        val blocked = base.withColumn("block",
-          pmod(xxhash64(col("id")), lit(nBlocks)).cast("int"))
-        // Cell (bi, bj), bi <= bj, gets every row of block bi on the left
-        // and every row of block bj on the right; a pair {x,y} with blocks
-        // (bx <= by) meets in exactly one cell. Same-block cells (bi == bj)
-        // see both orientations and dedup via id order; cross-block cells
-        // see exactly one orientation — whichever it is — so ids are
-        // normalized afterwards (cosine is symmetric, the vec columns need
-        // not follow the swap).
-        val left = blocked.select(col("id").as("id_a"), col("vec").as("vec_a"),
-          col("block").as("ba"),
-          explode(transform(sequence(col("block"), lit(nBlocks - 1)),
-            j => col("block") * nBlocks + j)).as("cell"))
-        val right = blocked.select(col("id").as("id_b"), col("vec").as("vec_b"),
-          col("block").as("bb"),
-          explode(transform(sequence(lit(0), col("block")),
-            i => i * nBlocks + col("block"))).as("cell"))
-        left.join(right, "cell")
-          .filter(col("ba") < col("bb") || col("id_a") < col("id_b"))
-          .select(
-            least(col("id_a"), col("id_b")).as("id_a"), col("vec_a"),
+        // Block grid over the whole corpus: the hash (not raw id) guards
+        // against clustered id ranges landing whole blocks on one cell.
+        // Cosine is symmetric, so only the ids are normalized.
+        Banding.gridSelfJoin(base, keys = Nil, payload = Seq("vec"), nBlocks,
+            pinCells = false)
+          .select(least(col("id_a"), col("id_b")).as("id_a"), col("vec_a"),
             greatest(col("id_a"), col("id_b")).as("id_b"), col("vec_b"))
       } else {
         // Banded rows carry ONLY (band, bucket, id) — the library's
@@ -401,37 +386,10 @@ object Similarity {
         // instead candidate id pairs are deduped first and the (id, vec)
         // sides are joined back from the slim base table, so each vector
         // crosses the wire once per surviving candidate, not once per band.
-        val bandedLazy = bandedRows(base, lshBits, rowsPerBand, dims)
-        // Both sides of the band self-join consume this — left lazy, the
-        // signature pass (lshBits × dims fused dot products per row) runs
-        // twice (measured ~25% slower at sf0.1; no exchange reuse applies —
-        // the two consumers' projections differ, so their exchanges never
-        // unify). Band rows are the bounded payload-free artifact
-        // (band, bucket, id), so materialize once via persist: lazy (no
-        // job at construction) and lineage-preserving (executor loss
-        // recomputes the lost blocks instead of failing the job, which a
-        // localCheckpoint's truncated lineage cannot). Dedup semantics are
-        // BEST-EFFORT, not a hard once-guarantee: within one executor the
-        // block manager's per-block locking serves the second consumer
-        // from the first computation, but the join's two map stages are
-        // submitted concurrently, so on a multi-executor cluster a
-        // partition scheduled on two executors before either stores its
-        // block computes twice. Callers needing a hard guarantee should
-        // materialize [[bandedRows]] with an action (or write it) first.
-        // Plan-shape tests assert the payload-free invariant on
-        // [[bandedRows]] directly — the exact subtree that runs here —
-        // plus end-to-end with materializeBands = false, so the production
-        // default cannot drift untested behind the persist boundary.
-        val banded =
-          if (materializeBands)
-            bandedLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else bandedLazy
-        val pairs = groupedIdPairs(banded, Seq("band", "bucket"), bucketGrid)
-          .select(col("id_a"), col("id_b"))
-          .dropDuplicates("id_a", "id_b")
-        pairs
-          // SHUFFLE_HASH on the vector side, same rationale as
-          // semanticDedup's attach joins: candidate pairs can be
+        // Uncapped: a skipped bucket would silently lose its pairs.
+        Banding.bucketPairs(bandedRows(base, lshBits, rowsPerBand, dims),
+            Banding.Uncapped, bucketGrid)
+          // SHUFFLE_HASH on the vector side: candidate pairs can be
           // quadratic in bucket sizes while base is |corpus|-bounded —
           // never sort the pair stream, build the id→vec hash table.
           // Tradeoff (r17 ADVICE): the hash build side cannot spill; a
@@ -453,87 +411,15 @@ object Similarity {
       .orderBy("id_a", "id_b")
   }
 
-  /** (band, bucket, id) rows for the hyperplane-LSH candidate join — the
+  /** (band, bucket, id) rows of the hyperplane-LSH banding — the
    * payload-free banding subtree of [[cosineNearDupPairs]], exposed
-   * package-private so plan tests pin its invariants on the exact
-   * production subtree (the default path wraps it in a lazy checkpoint,
-   * which hides the subtree from the result's logical plan). */
+   * package-private so plan tests pin its columns directly. Each band
+   * hashes `rowsPerBand` signature bits to one bucket value. */
   private[graft] def bandedRows(base: DataFrame, lshBits: Int,
       rowsPerBand: Int, dims: Int): DataFrame = {
     val sig = base.withColumn("sig", hyperplaneSignature(col("vec"), lshBits, dims))
-    sig.select(col("id"),
-      posexplode(bandHashes(col("sig"), lshBits, rowsPerBand)).as(Seq("band", "bucket")))
-  }
-
-  /** Unordered within-group id pairs, normalized to `id_a < id_b`: every
-   * {x, y} with x ≠ y in the same `keys` group appears exactly once
-   * (per group — a pair meeting in several groups appears once per group;
-   * callers dedup across groups when that matters, as the LSH band join
-   * does).
-   *
-   * With `grid = 1` this is the plain keyed self-join: one group = one
-   * join-key value, so a group of n rows pays its C(n, 2) enumeration in
-   * whatever single task holds that key — fine when groups are bounded,
-   * a serialization point when one is hot. With `grid = g > 1`, ids
-   * sub-block by hash and the pair space splits into g·(g+1)/2 grid
-   * cells ((sub_a, sub_b), sub_a <= sub_b — the exact-path nBlocks
-   * scheme, scoped per group): each cell is an independent join key, so
-   * a hot group's quadratic work spreads across ~g²/2 tasks. A pair with
-   * sub-blocks (sx <= sy) meets in exactly cell sx·g+sy; same-cell pairs
-   * (sx = sy) see both orientations and dedup via id order, cross-cell
-   * pairs see exactly one, so outputs are normalized with least/greatest.
-   * Each row ships (g−sub) ≈ g/2 extra copies — linear cost for
-   * quadratic per-task relief.
-   *
-   * The gridded path also repartitions the left side by the full join
-   * key: when the grouped rows are small enough to broadcast, the join
-   * otherwise streams the OTHER side at its scan partitioning — a
-   * single-file scan (or a coalesced upstream) would run the whole
-   * explosion in one task no matter how many grid cells exist. The
-   * exchange carries slim key+id rows only, and pins an EXPLICIT
-   * partition count (the session's shuffle parallelism): the whole point
-   * of the exchange is the parallelism of the explosion DOWNSTREAM of
-   * it, which AQE cannot see — left implicit, AQE reads the slim map
-   * output (kilobytes for a hot group about to explode into millions of
-   * pairs) and coalesces the exchange back into the one task the grid
-   * exists to avoid (measured: semanticDedup at 10× data, grid 8, was
-   * serialized right back to its ungridded 15 s until the count was
-   * pinned).
-   *
-   * `rows` must expose `keys` and an `id` column; output is
-   * (keys..., id_a, id_b). */
-  private[graft] def groupedIdPairs(rows: DataFrame, keys: Seq[String],
-      grid: Int): DataFrame = {
-    require(grid >= 1, s"groupedIdPairs: grid must be >= 1, got $grid")
-    val keyCols = keys.map(col)
-    if (grid == 1) {
-      val l = rows.select(keyCols :+ col("id").as("id_a"): _*)
-      val r = rows.select(keyCols :+ col("id").as("id_b"): _*)
-      l.join(r, keys)
-        .filter(col("id_a") < col("id_b"))
-        .select(keyCols :+ col("id_a") :+ col("id_b"): _*)
-    } else {
-      val sub = pmod(xxhash64(col("id")), lit(grid)).cast("int")
-      val l = rows
-        .select(keyCols :+ col("id").as("id_a") :+ sub.as("sa"): _*)
-        .withColumn("cell",
-          explode(transform(sequence(col("sa"), lit(grid - 1)),
-            j => col("sa") * grid + j)))
-      val r = rows
-        .select(keyCols :+ col("id").as("id_b") :+ sub.as("sb"): _*)
-        .withColumn("cell",
-          explode(transform(sequence(lit(0), col("sb")),
-            i => i * grid + col("sb"))))
-      val joinKeys = keys :+ "cell"
-      val parallelism =
-        rows.sparkSession.sessionState.conf.numShufflePartitions
-      l.repartition(parallelism, joinKeys.map(col): _*)
-        .join(r, joinKeys)
-        .filter(col("sa") < col("sb") || col("id_a") < col("id_b"))
-        .select(keyCols :+
-          least(col("id_a"), col("id_b")).as("id_a") :+
-          greatest(col("id_a"), col("id_b")).as("id_b"): _*)
-    }
+    sig.select(col("id"), posexplode(array((0 until lshBits / rowsPerBand)
+      .map(b => Banding.bandKey(col("sig"), b, rowsPerBand)): _*)).as(Seq("band", "bucket")))
   }
 
   /**
@@ -1006,9 +892,9 @@ object Similarity {
    *   [[ivfTopK]] — tests pass fixed centroids to pin assignment and the
    *   keeper rule independently of Lloyd's loop.
    * @param grid sub-block factor for the within-cell pair enumeration
-   *   ([[groupedIdPairs]]): with the default 1 a cell's C(n, 2) pair work
-   *   lives in one task per cid; `grid = g` splits it across ~g²/2 grid
-   *   cells. Quadratic-volume relief belongs to `k` (more, smaller cells
+   *   ([[graft.dedup.Banding.gridSelfJoin]]): with the default 1 a cell's
+   *   C(n, 2) pair work lives in one task per cid; `grid = g` splits it
+   *   across ~g²/2 grid cells. Quadratic-volume relief belongs to `k` (more, smaller cells
    *   — read [[semanticCellStats]] first); `grid` is the PARALLELISM
    *   knob for whatever cell sizes remain, and the insurance against the
    *   cid-join serializing when k is small relative to the cluster.
@@ -1016,48 +902,16 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, threshold: Double, k: Int = 16,
       iters: Int = 2, idCol: String = "vec_id", vecCol: String = "embedding",
       centroids: DataFrame = null, grid: Int = 1): DataFrame = {
-    require(grid >= 1, s"semanticDedup: grid must be >= 1, got $grid")
     val (base, assigned) =
       cellAssignment(corpus, k, iters, idCol, vecCol, centroids)
     // (cid, id, vec) — one linear attach of the vector BEFORE the cell
     // self-join; see the scaladoc for why the payload rides the linear
     // side of the exchange. The cosine filter consumes the join output
-    // in place; a pair {x, y} meets in exactly one (cid, cell) slot
-    // (same grid-cell arithmetic as groupedIdPairs), cosine is
-    // symmetric, and only the LARGER id is emitted, so no id
+    // in place; a pair {x, y} meets in exactly one (cid, cell) slot,
+    // cosine is symmetric, and only the LARGER id is emitted, so no id
     // normalization is needed.
-    val withVec = assigned.join(base, "id")
-    val dropped = (if (grid == 1) {
-      val l = withVec.select(col("cid"), col("id").as("id_a"),
-        col("vec").as("vec_a"))
-      val r = withVec.select(col("cid"), col("id").as("id_b"),
-        col("vec").as("vec_b"))
-      l.join(r, Seq("cid"))
-        .filter(col("id_a") < col("id_b"))
-    } else {
-      val sub = pmod(xxhash64(col("id")), lit(grid)).cast("int")
-      val l = withVec
-        .select(col("cid"), col("id").as("id_a"), col("vec").as("vec_a"),
-          sub.as("sa"))
-        .withColumn("cell",
-          explode(transform(sequence(col("sa"), lit(grid - 1)),
-            j => col("sa") * grid + j)))
-      val r = withVec
-        .select(col("cid"), col("id").as("id_b"), col("vec").as("vec_b"),
-          sub.as("sb"))
-        .withColumn("cell",
-          explode(transform(sequence(lit(0), col("sb")),
-            i => i * grid + col("sb"))))
-      // Explicit-count repartition for the same reason groupedIdPairs
-      // pins one: AQE sizes the exchange from the slim pre-explosion map
-      // output and would coalesce the quadratic explosion back into one
-      // task.
-      val parallelism =
-        withVec.sparkSession.sessionState.conf.numShufflePartitions
-      l.repartition(parallelism, col("cid"), col("cell"))
-        .join(r, Seq("cid", "cell"))
-        .filter(col("sa") < col("sb") || col("id_a") < col("id_b"))
-    })
+    val dropped = Banding.gridSelfJoin(assigned.join(base, "id"),
+        keys = Seq("cid"), payload = Seq("vec"), grid, pinCells = true)
       .filter(cosine(col("vec_a"), col("vec_b")) >= threshold)
       .select(greatest(col("id_a"), col("id_b")).as("id"))
       .distinct()
@@ -1149,15 +1003,6 @@ object Similarity {
     when(size(vec) === dims, array(bits: _*)).otherwise(raise_error(concat(
       lit(s"hyperplane LSH is configured for $dims-dim vectors, got "),
       size(vec).cast("string"), lit("-dim"))))
-  }
-
-  /** Hash each band of `rowsPerBand` signature bits to one bucket value. */
-  private def bandHashes(sig: Column, lshBits: Int, rowsPerBand: Int): Column = {
-    val nBands = lshBits / rowsPerBand
-    val hashes = (0 until nBands).map { band =>
-      xxhash64(lit(band), slice(sig, band * rowsPerBand + 1, rowsPerBand))
-    }
-    array(hashes: _*)
   }
 
   /**

@@ -1291,6 +1291,24 @@ class DedupSpec extends AnyFunSuite {
     assert(atOne._3 === 1L && atOne._4 === 2L)
   }
 
+  test("thresholdFrontier references the pair plan once") {
+    // n_pairs and n_docs come from one aggregate over one reference to the
+    // lazy pair plan, so the banding aggregate appears exactly as often as
+    // in jaccardNearDupPairs itself.
+    val d = docs(1L -> "the quick brown fox jumps", 2L -> "the quick brown fox jumped")
+    def cappedCollectors(df: DataFrame): Int =
+      df.queryExecution.analyzed.map(_.expressions.map(_.collect {
+        case c: CollectListCapped => c }.size).sum).sum
+    val inPairs = cappedCollectors(
+      jaccardNearDupPairs(d, 1, 2, k = 16, rows = 2, shingleWidth = 3))
+    assert(inPairs >= 1, "pair plan has no banding aggregate")
+    val frontier = thresholdFrontier(d, Seq((1, 2), (1, 1)), k = 16, rows = 2,
+      shingleWidth = 3)
+    assert(cappedCollectors(frontier) === inPairs)
+    assert(frontier.collect().map(r => (r.getLong(2), r.getLong(3))).toSeq ===
+      Seq((1L, 2L), (0L, 0L)))
+  }
+
   test("thresholdFrontier guards: empty, bad rational, duplicates") {
     val d = docs(1L -> "a b c")
     intercept[IllegalArgumentException] {

@@ -149,8 +149,7 @@ class PlanShapeSpec extends AnyFunSuite with graft.testutil.OpenStreamLeakCheck 
     // inspectable plan.
     val df = graft.dedup.Dedup.jaccardNearDupPairs(
       graft.sources.Tables.documents(spark, sf),
-      thresholdNum = 3, thresholdDen = 4, rows = 4, shingleWidth = 10,
-      materializeCandidates = false)
+      thresholdNum = 3, thresholdDen = 4, rows = 4, shingleWidth = 10)
     val p = plan(df)
     assert(!p.contains("CartesianProduct"), "q14 plans a cartesian join")
     assert(!p.contains("BroadcastNestedLoopJoin"), "q14 plans a nested-loop join")
@@ -164,8 +163,8 @@ class PlanShapeSpec extends AnyFunSuite with graft.testutil.OpenStreamLeakCheck 
     val p = plan(df)
     assert(!p.contains("CartesianProduct"), "q15 plans a cartesian join")
     assert(!p.contains("BroadcastNestedLoopJoin"), "q15 plans a nested-loop join")
-    // The banding self-join must never carry document text: no Exchange
-    // below the band join hashes a 'txt'/'text' column.
+    // The band shuffle must never carry document text: no Exchange hashes
+    // a 'txt'/'text' column.
     val exchangeLines = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
     assert(exchangeLines.nonEmpty)
     assert(!exchangeLines.exists(l => l.contains("txt") || l.contains("text")),
@@ -179,10 +178,9 @@ class PlanShapeSpec extends AnyFunSuite with graft.testutil.OpenStreamLeakCheck 
   }
 
   test("hyperplane LSH band subtree (production default path) is payload-free") {
-    // The default path lazily checkpoints the band rows, which hides the
-    // banding subtree behind a LogicalRDD in the end-to-end plan — so pin
-    // the invariant on bandedRows itself, the exact subtree the default
-    // wraps: its output must be (id, band, bucket) only, vector-free.
+    // Pin the invariant on bandedRows itself, the exact subtree the
+    // operator feeds into the bucket-pair aggregation: its output must be
+    // (id, band, bucket) only, vector-free.
     val base = graft.sources.Tables.embeddings(spark, sf)
       .select(org.apache.spark.sql.functions.col("vec_id").as("id"),
         org.apache.spark.sql.functions.col("embedding").as("vec"))
@@ -197,10 +195,11 @@ class PlanShapeSpec extends AnyFunSuite with graft.testutil.OpenStreamLeakCheck 
   }
 
   test("hyperplane LSH banding is payload-free: no embedding rides a band exchange") {
-    // materializeBands = false keeps the banding stage in one inspectable plan.
+    // The band rows are read once and never cached, so the banding stage
+    // sits in the operator's one plan.
     val p = plan(graft.similarity.Similarity.cosineNearDupPairs(
       graft.sources.Tables.embeddings(spark, sf), threshold = 0.45,
-      lshBits = 16, rowsPerBand = 2, materializeBands = false))
+      lshBits = 16, rowsPerBand = 2))
     assert(!p.contains("CartesianProduct"), "q54 plans a cartesian join")
     assert(!p.contains("BroadcastNestedLoopJoin"), "q54 plans a nested-loop join")
     // The band fan-out (posexplode Generate) must emit (band, bucket, id)
@@ -218,6 +217,31 @@ class PlanShapeSpec extends AnyFunSuite with graft.testutil.OpenStreamLeakCheck 
       .toSeq
     assert(!bandExchanges.exists(l => l.contains("vec") || l.contains("embedding")),
       s"embedding vector rides the band shuffle:\n${bandExchanges.mkString("\n")}")
+  }
+
+  test("one band fan-out per banded near-dup operator") {
+    // Every banded operator reads its band rows once (Banding.bucketPairs):
+    // a second fan-out in the executed plan means the signature pass runs
+    // twice — a self-join over the bands, or a cache read by two consumers.
+    // Counted on the adaptive plan's final section after execution, where a
+    // reused exchange prints as one ReusedExchange line, not as a second
+    // subtree. A band fan-out explodes the array of band keys; the pair
+    // enumeration's posexplode runs over a collected member list instead.
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val ops = Seq(
+      "jaccardNearDupPairs" -> graft.dedup.Dedup.jaccardNearDupPairs(
+        docs, thresholdNum = 3, thresholdDen = 4, rows = 4, shingleWidth = 10),
+      "simhashNearDupPairs" -> graft.dedup.Dedup.simhashNearDupPairs(docs),
+      "lshCalibrationAudit" -> graft.dedup.Dedup.lshCalibrationAudit(docs),
+      "cosineNearDupPairs(lshBits = 16)" -> graft.similarity.Similarity
+        .cosineNearDupPairs(graft.sources.Tables.embeddings(spark, sf),
+          threshold = 0.45, lshBits = 16, rowsPerBand = 2))
+    val fanOuts = ops.map { case (name, df) =>
+      df.collect()
+      name -> plan(df).split("== Initial Plan ==")(0).linesIterator
+        .count(_.contains("Generate posexplode(array("))
+    }
+    assert(fanOuts.forall(_._2 == 1), s"band fan-outs per operator: $fanOuts")
   }
 
   // Both production paths of the operator are pinned: q59 runs the

@@ -346,10 +346,12 @@ class SimilaritySpec extends AnyFunSuite {
       i -> (0 until 64).map(d => (Similarity.hyperplaneWeight(i.toInt, d) * 2 - 1).toFloat)
     }
     val df = vecs(rows: _*)
-    // bucketGrid = 1 is the plain bucket self-join — the ground truth;
-    // gridded runs must produce the identical verified pair set (a missed
-    // grid cell loses pairs, a double-covered one duplicates candidates
-    // that dropDuplicates would mask — so assert distinctness too).
+    // bucketGrid = 1 pairs each (band, bucket) in one aggregation group —
+    // the ground truth; gridded runs must produce the identical verified
+    // pair set (a missed grid cell loses pairs). Banding.bucketPairs
+    // dedups pairs across bands with distinct(), so the distinctness
+    // assertion pins the output contract; that a cell enumerates each of
+    // its pairs once is pinned by the bucketPairs test below.
     def run(g: Int) = cosineNearDupPairs(df, threshold = 0.3,
       lshBits = 16, rowsPerBand = 2, bucketGrid = g)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -365,28 +367,47 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("groupedIdPairs: gridded enumeration equals the plain self-join per group") {
+  test("bucketPairs: gridded enumeration equals brute force per bucket") {
     import spark.implicits._
-    // Groups of very different sizes, including singletons (no pairs) and
+    // Buckets of very different sizes, including singletons (no pairs) and
     // ids far larger than the grid, so sub-block hashing actually scatters.
     val members = Map(
       "hot" -> Seq.tabulate(40)(i => 1000L + i * 37L),
       "cold" -> Seq(1L, 2L),
       "solo" -> Seq(99L))
-    val rows = members.toSeq.flatMap { case (g, ids) => ids.map((g, _)) }
-      .toDF("grp", "id")
-    def run(g: Int) = Similarity.groupedIdPairs(rows, Seq("grp"), g)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val baseline = run(1)
-    // Plain-Scala ground truth: every unordered pair within each group.
-    val want = members.toSeq.flatMap { case (grp, ids) =>
-      for (a <- ids; b <- ids if a < b) yield (grp, a, b)
+    val rows = members.toSeq.flatMap { case (g, ids) => ids.map((0, g, _)) }
+      .toDF("band", "bucket", "id")
+    // Plain-Scala ground truth: every unordered pair within each bucket.
+    val want = members.values.toSeq.flatMap { ids =>
+      for (a <- ids; b <- ids if a < b) yield (a, b)
     }.toSet
-    assert(baseline.toSet === want)
-    for (g <- Seq(2, 5, 64)) {
-      val grid = run(g)
-      assert(grid.length === grid.distinct.length, s"duplicate pairs at grid=$g")
-      assert(grid.toSet === want, s"pair set mismatch at grid=$g")
+    object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for (g <- Seq(1, 2, 5, 64)) {
+      val df = graft.dedup.Banding.bucketPairs(rows, graft.dedup.Banding.Uncapped, g)
+      assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === want,
+        s"pair set mismatch at grid=$g")
+      // One band, so the final distinct() has nothing to merge: the pair
+      // explode itself must emit each pair once — a cell pairing ids of
+      // one sub-block off the diagonal would emit extras.
+      val emitted = plans.collect(df.queryExecution.executedPlan) {
+        case gen: org.apache.spark.sql.execution.GenerateExec
+            if gen.generatorOutput.map(_.name) == Seq("b") =>
+          gen.metrics("numOutputRows").value
+      }
+      assert(emitted.sum === want.size, s"pairs enumerated at grid=$g")
+    }
+    // Extra columns ride the members as a per-id payload, one per side.
+    val weighted = graft.dedup.Banding.bucketPairs(rows.withColumn("w", col("id") * 2),
+      graft.dedup.Banding.Uncapped, 5)
+    assert(weighted.columns.toSeq === Seq("id_a", "w_a", "id_b", "w_b"))
+    assert(weighted.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet === want.map { case (a, b) => (a, 2 * a, b, 2 * b) })
+    // A cap skips whole buckets over it; it counts the bucket, not a cell,
+    // so it cannot combine with a grid.
+    assert(graft.dedup.Banding.bucketPairs(rows, 2, 1).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
+    intercept[IllegalArgumentException] {
+      graft.dedup.Banding.bucketPairs(rows, 2, 2)
     }
   }
 
